@@ -1,7 +1,16 @@
 #!/usr/bin/env bash
 # Partition-count invariance sweep (the 100 TB determinism property):
-# run every declared query under shuffle.partitions = 4, 7 and 32 and
-# assert bit-identical sorted results per key. Usage:
+# run every declared query under shuffle.partitions = 4, 7 and 32, once
+# with the default file splits and once with 64 KB splits
+# (SPARK_GRAFT_SPLIT_BYTES), and assert bit-identical sorted results per
+# key within each split size; the 64 KB dump is then held to the DuckDB
+# oracle too. At the default split size each small fixture table is one
+# split, which the one-split fast path plans as a single partition; at
+# 64 KB every table is several splits, so the exchanges and range sorts
+# a table at scale gets are swept too. The two split sizes are not
+# compared with each other: the IVF k-means quantizer is fitted on the
+# scan's partitions, so the cell layout, and every key read through it,
+# follows the split count (each split size matches its oracle). Usage:
 #   scripts/invariance.sh [sfDir]    (default /root/testdata/sf0.01)
 #
 # Same hardening as judge.sh (ADVICE r7): stale dumps removed up front,
@@ -9,21 +18,27 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
-for n in 4 7 32; do
-  rm -rf "/tmp/graft_inv_$n"
-  LOG=/tmp/graft_inv_$n.log
-  echo "== Verify with shuffle.partitions=$n =="
-  if ! SPARK_GRAFT_CPUS=$n sbt -batch "runMain graft.Verify $SF /tmp/graft_inv_$n" >"$LOG" 2>&1; then
-    tail -n 40 "$LOG"
-    echo "VERIFY CRASHED (sbt exit != 0; full log: $LOG)"
-    exit 1
-  fi
-  if grep -E '\[verify\].*failed' "$LOG"; then
-    echo "VERIFY FAILURES ^"
-    exit 1
-  fi
+LEGS=()
+for split in "" 64k; do
+  for n in 4 7 32; do
+    leg=$n${split:+_$split}
+    LEGS+=("$leg")
+    rm -rf "/tmp/graft_inv_$leg"
+    LOG=/tmp/graft_inv_$leg.log
+    echo "== Verify with shuffle.partitions=$n, split bytes ${split:-default} =="
+    if ! SPARK_GRAFT_CPUS=$n SPARK_GRAFT_SPLIT_BYTES=$split \
+        sbt -batch "runMain graft.Verify $SF /tmp/graft_inv_$leg" >"$LOG" 2>&1; then
+      tail -n 40 "$LOG"
+      echo "VERIFY CRASHED (sbt exit != 0; full log: $LOG)"
+      exit 1
+    fi
+    if grep -E '\[verify\].*failed' "$LOG"; then
+      echo "VERIFY FAILURES ^"
+      exit 1
+    fi
+  done
 done
-python3 - <<'EOF'
+python3 - "${LEGS[@]}" <<'EOF'
 import glob, hashlib, sys, os
 import pyarrow.parquet as pq
 
@@ -48,10 +63,14 @@ def digest(df):
 
 keys = sorted(k for k in os.listdir("/tmp/graft_inv_4")
               if os.path.isdir(f"/tmp/graft_inv_4/{k}"))
+# each leg against the shuffle.partitions=4 leg of its own split size
+legs = [(l, "4" + l[len(l.split("_")[0]):]) for l in sys.argv[1:]]
 bad = []
-for n in (7, 32):
+for n, ref in legs:
+    if n == ref:
+        continue
     for k in keys:
-        a, b = load("/tmp/graft_inv_4", k), load(f"/tmp/graft_inv_{n}", k)
+        a, b = load(f"/tmp/graft_inv_{ref}", k), load(f"/tmp/graft_inv_{n}", k)
         if k in SKETCH:
             if len(a) != len(b):
                 bad.append((k, n, "row count"))
@@ -70,5 +89,8 @@ if bad:
     print("PARTITION-COUNT VARIANT KEYS:", bad)
     sys.exit(1)
 print(f"{len(keys)}/{len(keys)} keys invariant under shuffle.partitions = 4/7/32 "
+      f"at default and at 64 KB file splits "
       f"({len(keys) - len(SKETCH)} bit-identical, {len(SKETCH)} sketches within 2%)")
 EOF
+echo "== DuckDB oracle compare of the 64 KB split dump =="
+python3 scripts/check.py "$SF" /tmp/graft_inv_4_64k | tail -n 1

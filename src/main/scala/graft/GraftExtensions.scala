@@ -12,13 +12,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * and every session on the cluster (including SQL-only users who never
   * touch the Scala API) gets `fixed_dot` resolved by the analyzer, with
-  * codegen, no runtime `register()` call needed. This is the deployment
+  * codegen, no runtime `register()` call needed, and two planner
+  * strategies: the AS-OF JOIN operator's and the one-split file scan
+  * fast path (`graft.plans.OneSplitScanStrategy`). This is the deployment
   * story for the 1000-executor cluster: extensions ship in the jar and
   * are active from the first query, instead of depending on each
   * notebook calling a registration helper.
   *
   * `VectorFunctions.register` remains as the per-session fallback for
-  * environments that can't set cluster conf.
+  * environments that can't set cluster conf; each strategy has one too.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -37,5 +39,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the custom AS-OF JOIN operator's planner strategy (the per-session
     // fallback is AsofJoinOps.asofJoin appending to extraStrategies)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    // one-split file scans planned as one partition (the per-session
+    // fallback is Tables appending to extraStrategies)
+    ext.injectPlannerStrategy(_ => graft.plans.OneSplitScanStrategy)
   }
 }

@@ -14,20 +14,29 @@ object Tables {
 
   /** Resolved-relation cache — the catalog-metadata cache every warehouse
     * keeps: file listing + parquet footer schema are discovered ONCE per
-    * (session, dir, table) and the analyzed relation is reused by every
-    * later query (fixtures are immutable per round). Keyed by the session
-    * REFERENCE (SparkSession uses identity equality) because a DataFrame
-    * is bound to the session that analyzed it — an identityHashCode key
-    * could collide across live sessions and hand one session a plan
-    * analyzed by another. Entries are evicted when the session's context
-    * ends, so stopped test sessions don't pin their DataFrames forever.
-    * The DATA path is unaffected — each query still plans its own pruned
-    * columnar scan.
+    * (session, path) and the analyzed relation is reused by every later
+    * query (fixtures are immutable per round, layouts write-once). Keyed
+    * by the session REFERENCE (SparkSession uses identity equality)
+    * because a DataFrame is bound to the session that analyzed it — an
+    * identityHashCode key could collide across live sessions and hand one
+    * session a plan analyzed by another. Entries are evicted when the
+    * session's context ends, so stopped test sessions don't pin their
+    * DataFrames forever. The DATA path is unaffected — each query still
+    * plans its own pruned columnar scan.
+    *
+    * A session's first read also installs the one-split scan planner
+    * strategy (the per-session fallback of `GraftExtensions`).
     */
   private val relations = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]()
+    SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+  /** `spark.read.parquet(path)`, resolved once per session. Fixture
+    * tables and write-once layouts (`LlmOps`' dedup index) read through
+    * it: their listing and footer schema never change, and a fresh
+    * `s.read.parquet` would re-run parquet schema inference — a Spark
+    * job — inside every query that reads them.
+    */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
     relations.computeIfAbsent(spark, s => {
       s.sparkContext.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {
@@ -35,9 +44,14 @@ object Tables {
               end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
             relations.remove(s)
         })
-      new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-    }).computeIfAbsent((dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
+      if (!s.experimental.extraStrategies.contains(graft.plans.OneSplitScanStrategy))
+        s.experimental.extraStrategies =
+          s.experimental.extraStrategies :+ graft.plans.OneSplitScanStrategy
+      new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    }).computeIfAbsent(path, p => spark.read.parquet(p))
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

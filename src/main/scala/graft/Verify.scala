@@ -18,12 +18,18 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Optional file-split cap (spark.sql.files.maxPartitionBytes, e.g.
+    // 64k): small fixture tables then read as several splits and get the
+    // exchanges and range sorts of a table at scale instead of the
+    // one-split fast path's single-partition plans.
+    sys.env.get("SPARK_GRAFT_SPLIT_BYTES").filter(_.nonEmpty)
+      .foreach(builder.config("spark.sql.files.maxPartitionBytes", _))
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated filter for local iteration on a few

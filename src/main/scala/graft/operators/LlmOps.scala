@@ -106,7 +106,7 @@ object LlmOps extends OpGroup {
     // might_contain demands a CONSTANT or scalar-subquery bitset (the
     // InjectRuntimeFilter shape) — a scalar subquery keeps the build
     // fully distributed and the probe codegen'd
-    s.read.parquet(dedupIndex(s, d))
+    Tables.parquet(s, dedupIndex(s, d))
       .agg(expr(s"bloom_agg(h, ${items}L, ${bits}L)").as("bf"))
       .createOrReplaceTempView("graft_bloom_idx")
     Tables.documents(s, d)
@@ -134,7 +134,7 @@ object LlmOps extends OpGroup {
     // pre-filter is invisible to correctness by the no-false-negative
     // property, which CorpusDedupSpec pins along with selectivity.
     "bloom_prefilter_dedup" -> ((s, d) => {
-      val idx = s.read.parquet(dedupIndex(s, d))
+      val idx = Tables.parquet(s, dedupIndex(s, d))
       val pre = bloomPrefilteredBatch(s, d)
       val probed = pre.filter(col("maybe_seen"))
         .join(idx, Seq("h"), "left_outer")
@@ -177,7 +177,7 @@ object LlmOps extends OpGroup {
     // flips exactly where the formula says. DuckDB replays every
     // integer and the one FLOOR'd leaf from the same two counts.
     "bloom_dedup_crossover_plan" -> ((s, d) => {
-      val nIdx = s.read.parquet(dedupIndex(s, d))
+      val nIdx = Tables.parquet(s, dedupIndex(s, d))
         .agg(count(lit(1)).as("n_index"))
       val nDocs = Tables.documents(s, d)
         .agg(count(lit(1)).as("n_docs"),
@@ -220,7 +220,7 @@ object LlmOps extends OpGroup {
     // joined back on the hash (the exact_dedup_hash skew argument —
     // AQE splits a hot-hash JOIN, never a window).
     "incremental_dedup_index" -> ((s, d) => {
-      val idx = s.read.parquet(dedupIndex(s, d))
+      val idx = Tables.parquet(s, dedupIndex(s, d))
       val batch = Tables.documents(s, d)
         .filter(col("doc_id") % 5 === 4)
         .select(col("doc_id"), prefixKey.as("h"))

@@ -1,9 +1,11 @@
 package graft.operators
 
+import java.io.File
 import java.nio.file.Files
 
 import graft.{Det, OpGroup, Tables}
 import graft.streaming.StreamingOps
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -166,18 +168,22 @@ object PipelineOps extends OpGroup {
       val stage = freshDir("graft_t1_stage")
       val sink = freshDir("graft_t1_sink")
       val ckpt = freshDir("graft_t1_ckpt")
+      val schema =
+        StructType.fromDDL("event_id LONG, ts_us LONG, event_type STRING, value DOUBLE")
       stagePartsKnob(s, Tables.events(s, d)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_type"), col("value")))
         .write.mode(SaveMode.Overwrite).json(stage)
-      val q = StreamingOps.fileJsonStream(s,
-          StructType.fromDDL("event_id LONG, ts_us LONG, event_type STRING, value DOUBLE"),
-          stage)
+      val q = StreamingOps.fileJsonStream(s, schema, stage)
         .writeStream.format("parquet").option("path", sink)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(sink)
+      // staging and checkpoint are spent once the stream has drained; the
+      // sink stays, as the returned DataFrame reads it lazily
+      try q.awaitTermination()
+      finally Seq(stage, ckpt).foreach(p => FileUtils.deleteDirectory(new File(p)))
+      // the stream's schema is known: inferring it would run a job
+      s.read.schema(schema).parquet(sink)
         .select("event_id", "ts_us", "event_type", "value")
         .orderBy("event_id")
     }),

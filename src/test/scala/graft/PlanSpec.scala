@@ -12,6 +12,10 @@ import org.apache.spark.sql.functions._
   */
 class PlanSpec extends SparkSpec {
 
+  // at-scale shapes: every scan reads several splits, so the one-split
+  // fast path (graft.plans.OneSplitScanStrategy) never applies here
+  override def withFixture(test: NoArgTest) = multiSplit(super.withFixture(test))
+
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
 
