@@ -1,57 +1,63 @@
 package graft.functions
 
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{GetArrayItem, Literal}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF-style approximate nearest-neighbor search with a learned coarse
-  * quantizer — the 100 TB ANN path: fit KMeans ONCE on a bounded sample
+  * quantizer — the 100 TB ANN path: fit k-means ONCE on a bounded sample
   * (offline; never inside the per-query plan), assign every vector to a
   * cell at write time, then answer each query by scoring only the
   * `nprobe` cells whose centroids are nearest to the query.
   *
-  * The quantizer is SPHERICAL: vectors are L2-normalized before both
-  * training and assignment, so cells partition by direction — the
-  * quantity cosine top-k ranks by. Clustering raw vectors mixes
+  * The quantizer is SPHERICAL: vectors are unit-normalized (through
+  * [[VectorFunctions.unitNormalized]], the normalization PQ shares)
+  * before both training and assignment, so cells partition by direction
+  * — the quantity cosine top-k ranks by. Clustering raw vectors mixes
   * magnitude into the cells and craters recall.
   *
-  * Scale shape: cell assignment is a map-side model.transform; the probe
-  * is an equi-join on the cell id (cells are shuffle keys, candidate
-  * lists stay bounded); the centroid table is 'k' rows of model metadata
-  * broadcast to rank probe cells — never a per-row driver lookup.
+  * The fit is [[AnnPq.fitCodebooks]] with one subspace: driver-side
+  * Lloyd on the md5-ordered fixed-count sample of [[AnnPq.fitSample]],
+  * so the centroids — and every cell — are a function of the data
+  * alone, identical at any partition count or file-split size.
+  *
+  * Scale shape: cell assignment is a map-side projection (`ivf_cell`,
+  * PQ's compiled nearest-centroid kernel); the probe is an equi-join on
+  * the cell id (cells are shuffle keys, candidate lists stay bounded);
+  * the centroid table is `k` rows of model metadata broadcast to rank
+  * probe cells — never a per-row driver lookup.
   */
 object AnnIvf {
 
-  /** embedding (array<float>) → unit-norm `features` vector column. */
-  def features(s: SparkSession, df: DataFrame): DataFrame = {
+  /** The coarse quantizer's `k` centroids (unit-sphere coordinates). */
+  def fitQuantizer(sample: Array[Array[Float]], k: Int): Array[Array[Double]] =
+    AnnPq.fitCodebooks(sample, m = 1, k = k, iters = 20)(0)
+
+  /** `emb` (vec_id, embedding, ...) + INT `cell`: the index of the
+    * centroid nearest to each unit-normalized vector.
+    */
+  def assign(s: SparkSession, emb: DataFrame,
+      cents: Array[Array[Double]]): DataFrame = {
     VectorFunctions.register(s)
-    df.withColumn("__n", VectorFunctions.norm("embedding"))
-      .withColumn("features",
-        org.apache.spark.ml.functions.array_to_vector(
-          expr("transform(embedding, x -> CAST(x AS DOUBLE) / __n)")))
+    // a one-subspace PqEncode, registered under a name of its own so
+    // the session's `pq_encode` keeps its PQ codebook
+    s.sessionState.functionRegistry.createOrReplaceTempFunction("ivf_cell",
+      exprs => GetArrayItem(PqEncode(exprs.head, Array(cents)), Literal(0)),
+      "built-in")
+    emb.withColumn("__n", VectorFunctions.norm("embedding"))
+      .withColumn("cell", call_function("ivf_cell",
+        VectorFunctions.unitNormalized("embedding", "__n")))
       .drop("__n")
   }
-
-  /** Fit the coarse quantizer on a deterministic hash-sampled subset
-    * (content-derived, so reproducible for a given table; the sampling
-    * rate is the knob a 100 TB run turns down).
-    */
-  def fitQuantizer(s: SparkSession, emb: DataFrame, k: Int,
-      sampleMod: Int = 2, seed: Long = 42L): KMeansModel =
-    new KMeans()
-      .setK(k).setSeed(seed).setMaxIter(20)
-      .setFeaturesCol("features").setPredictionCol("cell")
-      .fit(features(s, emb.filter(pmod(xxhash64(col("vec_id")), lit(sampleMod)) === 0)))
 
   /** Top-`topK` cosine neighbors for every vector matching `queryPred`,
     * scoring only the `nprobe` nearest cells per query. Output:
     * (q_id, rank, neighbor_id, cell, cosine), deterministically ordered.
     */
-  def topk(s: SparkSession, emb: DataFrame, model: KMeansModel,
+  def topk(s: SparkSession, emb: DataFrame, cents: Array[Array[Double]],
       queryPred: Column, topK: Int, nprobe: Int): DataFrame =
-    topkAssigned(s, model.transform(features(s, emb)), model,
-      queryPred, topK, nprobe)
+    topkAssigned(s, assign(s, emb, cents), cents, queryPred, topK, nprobe)
 
   /** Same search over an ALREADY cell-assigned table — the serving path:
     * cells were assigned at write time (e.g. a parquet layout
@@ -59,15 +65,16 @@ object AnnIvf {
     * whole partitions via dynamic partition pruning instead of scanning
     * the corpus. Input needs (vec_id, embedding, cell).
     */
-  def topkAssigned(s: SparkSession, assigned0: DataFrame, model: KMeansModel,
-      queryPred: Column, topK: Int, nprobe: Int): DataFrame = {
+  def topkAssigned(s: SparkSession, assigned0: DataFrame,
+      cents: Array[Array[Double]], queryPred: Column, topK: Int,
+      nprobe: Int): DataFrame = {
     import s.implicits._
     VectorFunctions.register(s)
     val assigned = assigned0
       .select(col("vec_id"), col("embedding"), col("cell"),
         VectorFunctions.norm("embedding").as("norm"))
-    val centroids = model.clusterCenters.toSeq.zipWithIndex
-      .map { case (c, i) => (i, c.toArray) }
+    val centroids = cents.toSeq.zipWithIndex
+      .map { case (c, i) => (i, c) }
       .toDF("cand_cell", "centroid")
     val q = assigned.filter(queryPred)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{col, md5}
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
 
 /** Product quantization (PQ) for embedding search — the memory side of
@@ -25,12 +26,38 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
   * per-query window as every other ANN path. Compose with the IVF cell
   * layout for probe pruning; this file demonstrates the pure PQ scan.
   *
-  * Codebook fitting is Lloyd's algorithm run driver-side on a
-  * hash-sampled collected subset — deterministic by construction
-  * (md5-ordered init, fixed iterations, lowest-index tie-breaks), the
-  * same offline-model pattern as [[AnnIvf.fitQuantizer]].
+  * Codebook fitting is Lloyd's algorithm run driver-side on the
+  * collected [[fitSample]] — deterministic by construction (md5-ordered
+  * init, fixed iterations, lowest-index tie-breaks). It is the engine's one
+  * k-means: the IVF coarse quantizer is the same fit with one subspace
+  * ([[AnnIvf.fitQuantizer]]).
   */
 object AnnPq {
+
+  /** Fixed fit-sample size: 64 training vectors per PQ centroid (k=16
+    * codes × m=8 subspaces × 64). A fixed COUNT — not a fixed RATE — is
+    * what makes the driver-side k-means fit 100 TB-safe: a hash-rate
+    * filter collects a fraction of the corpus, which at 10⁹ vectors is a
+    * driver OOM inside the layout build, and centroid quality needs
+    * sample COUNT, not sample fraction.
+    */
+  val FIT_SAMPLE = 8192
+
+  /** The k-means fit input shared by PQ and IVF: the first
+    * min(|emb|, FIT_SAMPLE) unit-normalized embeddings in md5(vec_id)
+    * order. The md5-ordered `limit` keeps the sample — and the
+    * first-k-distinct Lloyd init drawn from it — identical under any
+    * partitioning (TakeOrderedAndProject: each partition ships only its
+    * local top-N keys).
+    */
+  def fitSample(emb: DataFrame): Array[Array[Float]] = {
+    VectorFunctions.register(emb.sparkSession)
+    emb.withColumn("__n", VectorFunctions.norm("embedding"))
+      .select(md5(col("vec_id").cast("string")).as("h"),
+        VectorFunctions.unitNormalized("embedding", "__n").as("ne"))
+      .orderBy("h").limit(FIT_SAMPLE).collect()
+      .map(_.getSeq[Float](1).toArray)
+  }
 
   /** Deterministic per-subspace codebooks: Array(m)(k)(subDim). */
   def fitCodebooks(sample: Array[Array[Float]], m: Int, k: Int,

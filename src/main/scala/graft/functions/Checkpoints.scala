@@ -42,6 +42,23 @@ object Checkpoints {
     */
   def pin(df: DataFrame): DataFrame = GlobalRank.trackedSnapshot(df)
 
+  /** [[pin]] a DERIVED plan — one with an Aggregate, Join, Window or
+    * Generate — that is not already a pinned `LogicalRDD`; scan-shaped
+    * and already-pinned inputs come back untouched. The rule for an
+    * input that a routing count executes and the chosen route then
+    * executes again (GlobalRank's `pinInput`, GraphOps' node count).
+    */
+  def pinIfDerived(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.{logical => l}
+    val derived = df.queryExecution.optimizedPlan.exists {
+      case _: l.Aggregate | _: l.Join | _: l.Window | _: l.Generate => true
+      case _ => false
+    }
+    val pinned = df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    if (derived && !pinned) pin(df) else df
+  }
+
   /** Size-gated [[pin]] for corpus-shaped multi-consumer subtrees:
     * pins only when a DRIVER-KNOWN row measure (parquet footer count /
     * an already-collected size — never a new Spark job) is at most

@@ -148,17 +148,8 @@ object GlobalRank {
     * preserves the pre-r18 plan. Scan-shaped and already-pinned inputs
     * are never re-pinned.
     */
-  private def pinIfWorthIt(df: DataFrame, pinInput: Boolean): DataFrame = {
-    if (!pinInput) return df
-    import org.apache.spark.sql.catalyst.plans.{logical => l}
-    val derived = df.queryExecution.optimizedPlan.exists {
-      case _: l.Aggregate | _: l.Join | _: l.Window | _: l.Generate => true
-      case _ => false
-    }
-    val alreadyPinned = df.queryExecution.analyzed.isInstanceOf[
-      org.apache.spark.sql.execution.LogicalRDD]
-    if (derived && !alreadyPinned) snapshot(df) else df
-  }
+  private def pinIfWorthIt(df: DataFrame, pinInput: Boolean): DataFrame =
+    if (pinInput) Checkpoints.pinIfDerived(df) else df
 
   /** Per-group max row count from the cheap routing pass (one tiny row
     * per group — GlobalRank exists for few-group rankings, so the
@@ -304,68 +295,13 @@ object GlobalRank {
     * Σ valueCol over all rows ordered ≤ the current row (inclusive).
     * Exact for integral values (long addition is associative); for
     * doubles route the value through DECIMAL first (Det.decSum logic).
+    * The one-column case of [[prefixSums]].
     */
   def prefixSum(df: DataFrame, sumCol: String, valueCol: Column,
       groupCols: Seq[String], orderCols: Seq[String], numSlices: Int = 32,
-      sliceOn: Option[Column] = None, pinInput: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    val threshold = spark.conf.get(ThresholdKey, "4000000").toLong
-    val base = sliceOn.getOrElse(col(orderCols.head)).cast("double")
-    val input = pinIfWorthIt(df, pinInput)
-    val maxCnt = measureCounts(input, groupCols)
-
-    if (maxCnt <= threshold) {
-      val w = (if (groupCols.isEmpty) Window.partitionBy()
-               else Window.partitionBy(groupCols.map(col): _*))
-        .orderBy(orderCols.map(col): _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      input.withColumn(sumCol, sum(valueCol).over(w))
-    } else {
-      // Same pinning as rowNumber: all measuring passes and the final
-      // plan must see identical rows (see comment there).
-      val snap = if (input eq df) snapshot(df) else input
-      val stats = measureBounds(snap, base, groupCols, numSlices)
-      val slice = "__gr_pid" +: groupCols
-      val sliced = withSlice(snap, base, groupCols, numSlices, stats)
-        .withColumn("__gr_v", valueCol)
-      val totalsDf = sliced.groupBy(slice.map(col): _*)
-        .agg(sum(col("__gr_v")).as("__gr_tot"))
-      val totals = totalsDf.collect()
-      // generic numeric prefix over the sum()'s result type
-      val plus: (Any, Any) => Any = {
-        case (null, b) => b
-        case (a, null) => a
-        case (a: java.lang.Long, b: java.lang.Long) =>
-          java.lang.Long.valueOf(a + b)
-        case (a: java.lang.Double, b: java.lang.Double) =>
-          java.lang.Double.valueOf(a + b)
-        case (a: java.math.BigDecimal, b: java.math.BigDecimal) => a.add(b)
-        case (a, _) => throw new IllegalArgumentException(
-          s"unsupported prefix-sum type ${a.getClass}")
-      }
-      val offs = spark.createDataFrame(
-        java.util.Arrays.asList(
-          sliceOffsets(totals, groupCols, null, plus): _*),
-        StructType(sliced.select(slice.map(col): _*).schema.fields :+
-          StructField("__gr_off",
-            totalsDf.schema("__gr_tot").dataType, nullable = true)))
-      val local = sliced.withColumn("__gr_run",
-        sum(col("__gr_v")).over(
-          Window.partitionBy(slice.map(col): _*)
-            .orderBy(orderCols.map(col): _*)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      // Keep the OUTPUT TYPE identical to the small path's sum(): the
-      // zero literal is cast to the sum result type (a bare lit(0) is
-      // INT and coalesce would widen decimals), and the final addition
-      // is cast back (decimal + decimal widens precision by one).
-      val sumType = totalsDf.schema("__gr_tot").dataType
-      nullSafeBroadcastJoin(local, offs, slice)
-        .withColumn(sumCol,
-          (coalesce(col("__gr_off"), lit(0).cast(sumType)) + col("__gr_run"))
-            .cast(sumType))
-        .drop("__gr_pid", "__gr_run", "__gr_off", "__gr_v")
-    }
-  }
+      sliceOn: Option[Column] = None, pinInput: Boolean = false): DataFrame =
+    prefixSums(df, Seq(sumCol -> valueCol), groupCols, orderCols,
+      numSlices, sliceOn, pinInput)
 
   /** Multi-column [[prefixSum]] (r18): N running sums over the SAME
     * (group, order) in ONE call. A chain of single-column prefixSum
@@ -377,7 +313,9 @@ object GlobalRank {
     * pass and the per-slice totals collect run once; the small path is
     * one window with N sum expressions; the sliced path carries an
     * N-column offset ladder. Output types match the chained form
-    * column-for-column (same sum()/coalesce/cast discipline).
+    * column-for-column (same sum()/coalesce/cast discipline). Every
+    * value is evaluated against the INPUT on both routes, so a value
+    * never sees another sum's output name.
     */
   def prefixSums(df: DataFrame, sums: Seq[(String, Column)],
       groupCols: Seq[String], orderCols: Seq[String], numSlices: Int = 32,
@@ -387,29 +325,26 @@ object GlobalRank {
     val base = sliceOn.getOrElse(col(orderCols.head)).cast("double")
     val input = pinIfWorthIt(df, pinInput)
     val maxCnt = measureCounts(input, groupCols)
+    val vals = sums.indices.map(i => s"__gr_v$i")
+    def withValues(d: DataFrame): DataFrame = d.select(col("*") +:
+      sums.zip(vals).map { case ((_, v), vn) => v.as(vn) }: _*)
 
     if (maxCnt <= threshold) {
       val w = (if (groupCols.isEmpty) Window.partitionBy()
                else Window.partitionBy(groupCols.map(col): _*))
         .orderBy(orderCols.map(col): _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      sums.foldLeft(input) { case (acc, (name, value)) =>
-        acc.withColumn(name, sum(value).over(w))
-      }
+      sums.zip(vals).foldLeft(withValues(input)) { case (acc, ((name, _), vn)) =>
+        acc.withColumn(name, sum(col(vn)).over(w))
+      }.drop(vals: _*)
     } else {
       val snap = if (input eq df) snapshot(df) else input
       val stats = measureBounds(snap, base, groupCols, numSlices)
       val slice = "__gr_pid" +: groupCols
-      val valCols = sums.zipWithIndex.map { case ((_, v), i) =>
-        (s"__gr_v$i", v)
-      }
-      val sliced = valCols.foldLeft(
-        withSlice(snap, base, groupCols, numSlices, stats)) {
-        case (acc, (vn, v)) => acc.withColumn(vn, v)
-      }
+      val sliced = withValues(withSlice(snap, base, groupCols, numSlices, stats))
       val totalsDf = sliced.groupBy(slice.map(col): _*)
-        .agg(sum(col(valCols.head._1)).as("__gr_tot0"),
-          valCols.tail.zipWithIndex.map { case ((vn, _), i) =>
+        .agg(sum(col(vals.head)).as("__gr_tot0"),
+          vals.tail.zipWithIndex.map { case (vn, i) =>
             sum(col(vn)).as(s"__gr_tot${i + 1}")
           }: _*)
       val totals = totalsDf.collect()

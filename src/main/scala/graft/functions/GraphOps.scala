@@ -59,17 +59,7 @@ object GraphOps {
     // checkpoint) — the same pin-first-then-measure discipline
     // GlobalRank uses. Scan-shaped and already-pinned inputs keep
     // their plans untouched, so in-repo callers see zero plan change.
-    val nodesOnly = {
-      import org.apache.spark.sql.catalyst.plans.{logical => l}
-      val proj = nodes.select(col(idCol))
-      val derived = proj.queryExecution.optimizedPlan.exists {
-        case _: l.Aggregate | _: l.Join | _: l.Window | _: l.Generate => true
-        case _ => false
-      }
-      val pinned = proj.queryExecution.analyzed
-        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
-      if (derived && !pinned) Checkpoints.pin(proj) else proj
-    }
+    val nodesOnly = Checkpoints.pinIfDerived(nodes.select(col(idCol)))
     val nNodes = nodesOnly.count()
     val edgeCap = 6L * threshold
     val smallEdges: Option[Array[Row]] =

@@ -86,7 +86,7 @@ object IncrementalIvfOps extends OpGroup {
   /** Encode (vec_id, embedding) rows on the FROZEN models into serving
     * rows (vec_id, cell, dist2_fp, codes) — bit-identical to what the
     * original layout build produced for the same vectors: cell via the
-    * frozen KMeans transform, dist2_fp via the exact
+    * frozen centroids' assignment, dist2_fp via the exact
     * [[SemiStructuredOps.outlierDistances]] float-then-fixed-point
     * derivation against the PERSISTED centroids, codes via the frozen
     * PQ codebooks over the same unit-normalized floats.
@@ -96,11 +96,11 @@ object IncrementalIvfOps extends OpGroup {
     graft.functions.VectorFunctions.register(s)
     graft.functions.AnnPq.register(s,
       SemiStructuredOps.frozenPqCodebook(s, d))
-    val model = SemiStructuredOps.frozenQuantizer(s, d)
     val cents = s.read
       .parquet(s"${SemiStructuredOps.ivfLayout(s, d)}.centroids")
       .select(col("cand_cell").cast("int").as("cell"), col("centroid"))
-    model.transform(graft.functions.AnnIvf.features(s, vecs))
+    graft.functions.AnnIvf
+      .assign(s, vecs, SemiStructuredOps.frozenQuantizer(s, d))
       .select(col("vec_id"), col("embedding"), col("cell"))
       .withColumn("norm", graft.functions.VectorFunctions.norm("embedding"))
       .join(broadcast(cents), "cell")

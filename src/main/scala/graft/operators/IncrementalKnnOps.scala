@@ -98,9 +98,8 @@ object IncrementalKnnOps extends OpGroup {
 
   /** Fresh batch rows encoded on the FROZEN coarse quantizer. */
   private def freshWithCells(s: SparkSession, d: String): DataFrame =
-    SemiStructuredOps.frozenQuantizer(s, d)
-      .transform(graft.functions.AnnIvf.features(s,
-        IncrementalIvfOps.freshBatchVecs(s, d)))
+    graft.functions.AnnIvf.assign(s, IncrementalIvfOps.freshBatchVecs(s, d),
+        SemiStructuredOps.frozenQuantizer(s, d))
       .select(col("vec_id"), col("embedding"),
         col("cell").cast("int").as("cell"))
 

@@ -12,18 +12,20 @@ import org.apache.spark.sql.functions._
   *     encoding, extract typed fields. This is what the reference's
   *     defensive `.get(...)` dict access (app.py:143,156-157) becomes at
   *     warehouse scale.
-  *   - KMeans IVF: ann_ivf_topk uses the stored `label` as the coarse
-  *     cell; here the quantizer is LEARNED (MLlib KMeans, fixed seed) —
-  *     the genuine 100 TB ANN path: train ONCE on a bounded
-  *     deterministic sample (never inside the per-query plan), assign
-  *     cells at write time, probe the nprobe=2 nearest cells per query.
-  *     Cluster assignments are model-dependent ⇒ rows-only check +
-  *     structural and recall assertions in AnnSpec.
+  *   - k-means IVF: ann_ivf_topk uses the stored `label` as the coarse
+  *     cell; here the quantizer is LEARNED (driver-side spherical
+  *     k-means, [[graft.functions.AnnIvf]]) — the genuine 100 TB ANN
+  *     path: train ONCE on a bounded md5-ordered sample (never inside
+  *     the per-query plan), assign cells at write time, probe the
+  *     nprobe=2 nearest cells per query. The fit reads no partitioning,
+  *     so cells are a function of the data alone. Cluster assignments
+  *     are model-dependent ⇒ rows-only check + structural and recall
+  *     assertions in AnnSpec.
   */
 object SemiStructuredOps extends OpGroup {
 
-  /** One quantizer per dataset, fitted lazily on a deterministic
-    * hash-sampled subset and reused by every invocation — at 100 TB the
+  /** One quantizer (k centroids) per dataset, fitted lazily on the
+    * shared fit sample and reused by every invocation — at 100 TB the
     * model is fitted offline on a sample and persisted next to the
     * table; re-training inside a query would be wrong by construction.
     * k=4 cells: the fixture embeddings are directionally near-uniform
@@ -32,7 +34,7 @@ object SemiStructuredOps extends OpGroup {
     * corpora take a larger k (AnnSpec's planted-cluster test runs k=8).
     */
   private val quantizers =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.ml.clustering.KMeansModel]()
+    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
 
   /** Target cell population for the coarse quantizer. k scales as
     * ⌈n / TargetCellSize⌉ (floored at 4) so Σ|cell|² — the candidate
@@ -49,11 +51,12 @@ object SemiStructuredOps extends OpGroup {
     */
   private val TargetCellSize = 500L
 
-  private def quantizer(s: SparkSession, d: String): org.apache.spark.ml.clustering.KMeansModel =
+  private def quantizer(s: SparkSession, d: String): Array[Array[Double]] =
     quantizers.computeIfAbsent(d, _ => {
       val n = Tables.rowCount(s, d, "embeddings")
       val k = math.max(4L, (n + TargetCellSize - 1) / TargetCellSize).toInt
-      graft.functions.AnnIvf.fitQuantizer(s, Tables.embeddings(s, d), k = k)
+      graft.functions.AnnIvf.fitQuantizer(
+        graft.functions.AnnPq.fitSample(Tables.embeddings(s, d)), k)
     })
 
   /** The FROZEN coarse quantizer, exposed for the CDC-incremental IVF
@@ -63,7 +66,7 @@ object SemiStructuredOps extends OpGroup {
     * come from different models (the serving-layout contract).
     */
   private[graft] def frozenQuantizer(s: SparkSession, d: String)
-      : org.apache.spark.ml.clustering.KMeansModel = quantizer(s, d)
+      : Array[Array[Double]] = quantizer(s, d)
 
   /** The FROZEN PQ codebooks, same contract as [[frozenQuantizer]]. */
   private[graft] def frozenPqCodebook(s: SparkSession, d: String)
@@ -89,14 +92,13 @@ object SemiStructuredOps extends OpGroup {
 
   private[graft] def ivfLayout(s: SparkSession, d: String): String =
     ivfLayoutCache(s, d, graft.Layout.fingerprint(Tables.embeddings(s, d))) { p =>
-      quantizer(s, d)
-        .transform(graft.functions.AnnIvf.features(s, Tables.embeddings(s, d)))
+      graft.functions.AnnIvf.assign(s, Tables.embeddings(s, d), quantizer(s, d))
         .select(col("vec_id"), col("embedding"), col("cell"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("cell").parquet(p)
       import s.implicits._
-      quantizer(s, d).clusterCenters.toSeq.zipWithIndex
-        .map { case (c, i) => (i, c.toArray) }
+      quantizer(s, d).toSeq.zipWithIndex
+        .map { case (c, i) => (i, c) }
         .toDF("cand_cell", "centroid")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(s"$p.centroids")
@@ -140,42 +142,17 @@ object SemiStructuredOps extends OpGroup {
         expr("fixed_dot(diff, diff)").as("dist2_fp"))
   }
 
-  /** PQ codebooks, fitted once per dataset driver-side on a
-    * deterministic md5-ordered hash sample of NORMALIZED vectors —
-    * offline model fitting, like [[quantizer]]. m=8 subspaces, k=16
+  /** PQ codebooks, fitted once per dataset driver-side on the same
+    * md5-ordered sample of NORMALIZED vectors as [[quantizer]] —
+    * offline model fitting. m=8 subspaces, k=16
     * codes: 64-dim float32 → 8 small ints, ~32× scan compression.
     */
   private val pqCodebooks = new java.util.concurrent.ConcurrentHashMap[
     String, Array[Array[Array[Double]]]]()
 
-  /** Fixed fit-sample size for the PQ codebook: 64 training vectors per
-    * centroid (k=16 codes × m=8 subspaces × 64). A fixed COUNT — not a
-    * fixed RATE — is what makes the driver-side k-means fit 100 TB-safe:
-    * the pre-r13 `xxhash64 % 2 == 0` filter collected 50% of the corpus,
-    * which at 10⁹ vectors is a driver OOM inside the layout build. The
-    * md5-ordered `limit` keeps the sample deterministic under any
-    * partitioning (TakeOrderedAndProject: each partition ships only its
-    * local top-N keys), and codebook quality needs sample COUNT, not
-    * sample fraction. AnnSpec pins that the fit input is
-    * min(|corpus|, PQ_FIT_SAMPLE) rows at two scale factors.
-    */
-  private[graft] val PQ_FIT_SAMPLE = 8192
-
-  /** The codebook fit input, exposed for AnnSpec's constancy pin. */
-  private[graft] def pqFitSample(s: SparkSession, d: String): Array[Array[Float]] = {
-    graft.functions.VectorFunctions.register(s)
-    Tables.embeddings(s, d)
-      .withColumn("__n", graft.functions.VectorFunctions.norm("embedding"))
-      .select(md5(col("vec_id").cast("string")).as("h"),
-        graft.functions.VectorFunctions
-          .unitNormalized("embedding", "__n").as("ne"))
-      .orderBy("h").limit(PQ_FIT_SAMPLE).collect()
-      .map(_.getSeq[Float](1).toArray)
-  }
-
   private def pqCodebook(s: SparkSession, d: String): Array[Array[Array[Double]]] =
-    pqCodebooks.computeIfAbsent(d, _ =>
-      graft.functions.AnnPq.fitCodebooks(pqFitSample(s, d), m = 8, k = 16))
+    pqCodebooks.computeIfAbsent(d, _ => graft.functions.AnnPq.fitCodebooks(
+      graft.functions.AnnPq.fitSample(Tables.embeddings(s, d)), m = 8, k = 16))
 
   /** PQ serving layout, written once per (session, dataset): the
     * normalized vectors + their codes as one parquet, the codebook
@@ -225,15 +202,15 @@ object SemiStructuredOps extends OpGroup {
         .orderBy("event_id")),
 
     // IVF with a learned coarse quantizer: the pre-fitted spherical
-    // KMeans model assigns cells at scan time; each query probes its
+    // k-means centroids assign cells at scan time; each query probes its
     // nprobe=2 nearest centroids (recall floor asserted in AnnSpec
     // against the exact brute-force top-k), exact fixed-point cosine
     // within them. See graft.functions.AnnIvf for the plan shape.
     "ann_kmeans_ivf" -> ((s, d) => {
       // materialize the serving layout (write-once): the oracle verifies
       // THIS query against the persisted cells + centroids, which are
-      // exactly what the in-memory transform assigns (same fitted model,
-      // deterministic transform; AnnSpec asserts the identity)
+      // exactly what the in-memory assignment gives (same centroids,
+      // deterministic kernel; AnnSpec asserts the identity)
       ivfLayout(s, d)
       graft.functions.AnnIvf.topk(s, Tables.embeddings(s, d),
         quantizer(s, d), col("vec_id") < 10, topK = 3, nprobe = 2)
@@ -1106,7 +1083,7 @@ object SemiStructuredOps extends OpGroup {
     },
     // ann_kmeans_ivf (the in-memory-assign path) provably returns the
     // SAME rows as the serving layout probe — the layout's cells ARE the
-    // fitted model's transform output (AnnSpec asserts the identity) —
+    // fitted centroids' assignment output (AnnSpec asserts the identity) —
     // so it shares the structural re-derivation verbatim.
     "ann_kmeans_ivf" -> ivfProbeSql,
     // the LP recurrence unrolled to LpIters chained CTE stages (the

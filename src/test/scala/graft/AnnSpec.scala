@@ -64,9 +64,10 @@ class AnnSpec extends SparkSpec {
         .sortBy { case (id, c) => (-c, id) }
         .take(3).map { case (id, _) => (q.toLong, id) }
     }.toSet
-    val model = graft.functions.AnnIvf.fitQuantizer(spark, df, k = 8)
+    val cents = graft.functions.AnnIvf
+      .fitQuantizer(graft.functions.AnnPq.fitSample(df), k = 8)
     val ann = graft.functions.AnnIvf
-      .topk(spark, df, model, col("vec_id") < 10, topK = 3, nprobe = 2)
+      .topk(spark, df, cents, col("vec_id") < 10, topK = 3, nprobe = 2)
       .select("q_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (ann intersect exact).size.toDouble / exact.size
     assert(recall >= 0.9, s"clustered recall@3 = $recall")
@@ -80,6 +81,36 @@ class AnnSpec extends SparkSpec {
       .select("q_id", "rank", "neighbor_id", "cell")
       .as[(Long, Int, Long, Int)].collect().toSet
     assert(served === mem)
+  }
+
+  test("IVF quantizer and layout cells do not depend on the file-split size") {
+    // The fit reads an md5-ordered sample and runs Lloyd on the driver,
+    // so 1 KB splits (the partitioning of a table at scale) must give
+    // the same centroids and the same cell for every vector.
+    val d = sf()
+    def fit(): (Seq[Seq[Double]], Map[Long, Int]) = {
+      val emb = Tables.embeddings(spark, d)
+      val cents = graft.functions.AnnIvf
+        .fitQuantizer(graft.functions.AnnPq.fitSample(emb), k = 4)
+      val cells = graft.functions.AnnIvf.assign(spark, emb, cents)
+        .select("vec_id", "cell").as[(Long, Int)].collect().toMap
+      (cents.map(_.toSeq).toSeq, cells)
+    }
+    val (cents, cells) = fit()
+    val (centsSplit, cellsSplit) = multiSplit {
+      assert(Tables.embeddings(spark, d).rdd.getNumPartitions > 1,
+        "1 KB splits cut the embeddings table")
+      fit()
+    }
+    assert(centsSplit === cents, "centroids")
+    assert(cellsSplit === cells, "per-vector cells")
+    assert(operators.SemiStructuredOps.frozenQuantizer(spark, d)
+      .map(_.toSeq).toSeq === cents, "the session's quantizer is this fit")
+    val layout = spark.read
+      .parquet(operators.SemiStructuredOps.ivfLayout(spark, d))
+      .select(col("vec_id"), col("cell").cast("int"))
+      .as[(Long, Int)].collect().toMap
+    assert(layout === cells, "the IVF layout carries these cells")
   }
 
   test("PQ: 8 small-int codes per vector; ADC self-score preserves most of the unit norm") {
@@ -109,31 +140,31 @@ class AnnSpec extends SparkSpec {
     assert(cb.flatten.flatten.toSeq === cb2.flatten.flatten.toSeq)
   }
 
-  test("PQ codebook fit input is min(|corpus|, PQ_FIT_SAMPLE) — a fixed count, not a rate") {
+  test("k-means fit input is min(|corpus|, FIT_SAMPLE) — a fixed count, not a rate") {
+    import graft.functions.AnnPq.{FIT_SAMPLE, fitSample}
     // Fixture side: the cap does not bind (500 < 8192) and the fit sees
     // the WHOLE corpus, deterministically md5-ordered.
     val n001 = Tables.embeddings(spark, sf()).count()
-    val s001 = graft.operators.SemiStructuredOps.pqFitSample(spark, sf())
-    assert(s001.length ==
-      math.min(n001, graft.operators.SemiStructuredOps.PQ_FIT_SAMPLE.toLong))
+    val s001 = fitSample(Tables.embeddings(spark, sf()))
+    assert(s001.length == math.min(n001, FIT_SAMPLE.toLong))
     // Scale side: a corpus LARGER than the cap yields exactly
-    // PQ_FIT_SAMPLE rows — the driver collect is constant in corpus
+    // FIT_SAMPLE rows — the driver collect is constant in corpus
     // size (the r12 verdict's 100 TB flag: the old xxhash64%2 filter
     // collected a 50% *fraction*).
     val dir = tmpDir("graft_pqfit")
-    val big = spark.range(0, graft.operators.SemiStructuredOps.PQ_FIT_SAMPLE * 2L)
+    val big = spark.range(0, FIT_SAMPLE * 2L)
       .selectExpr("id AS vec_id",
         // unit-scale components (the embeddings fixture's envelope):
         // fixed_dot's 1e15 fixed point overflows int64 past |x| ≈ 3
         "transform(sequence(1, 8), i -> CAST((pmod(id * i, 97) + 1) / 98.0 AS FLOAT)) AS embedding",
         "CAST(id % 4 AS INT) AS label")
     big.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val sBig = graft.operators.SemiStructuredOps.pqFitSample(spark, dir)
-    assert(sBig.length == graft.operators.SemiStructuredOps.PQ_FIT_SAMPLE)
+    val sBig = fitSample(Tables.embeddings(spark, dir))
+    assert(sBig.length == FIT_SAMPLE)
     // determinism of the capped sample under a different partitioning
     spark.conf.set("spark.sql.shuffle.partitions", "7")
     try {
-      val sBig2 = graft.operators.SemiStructuredOps.pqFitSample(spark, dir)
+      val sBig2 = fitSample(Tables.embeddings(spark, dir))
       assert(sBig.map(_.toSeq).toSeq == sBig2.map(_.toSeq).toSeq)
     } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
   }
@@ -354,7 +385,7 @@ class AnnSpec extends SparkSpec {
     }
   }
 
-  test("kmeans IVF is deterministic across invocations (fixed seed)") {
+  test("kmeans IVF is deterministic across invocations") {
     val a = SparkEntry.queries("ann_kmeans_ivf")(spark, sf())
       .select("q_id", "rank", "neighbor_id").as[(Long, Int, Long)].collect().toSet
     val b = SparkEntry.queries("ann_kmeans_ivf")(spark, sf())

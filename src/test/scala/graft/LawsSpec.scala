@@ -186,7 +186,7 @@ object LawsSpec extends Properties("GraftLaws") {
     }
 
   // GlobalRank r18: the multi-column prefixSums equals the chained
-  // single-column prefixSum, on both routes (one measuring pass +
+  // single-column prefixSums, on both routes (one measuring pass +
   // N-column offset ladder vs k measuring passes)
   property("multi-column prefix sums equal the chained form") =
     forAll(Gen.nonEmptyListOf(Gen.zip(Gen.chooseNum(-50L, 50L),
@@ -207,15 +207,38 @@ object LawsSpec extends Properties("GraftLaws") {
           .collect().map(r => r._1 -> (r._2, r._3)).toMap
         val chained = {
           val c1 = graft.functions.GlobalRank
-            .prefixSum(df, "ca", col("a"), Nil, Seq("k"),
+            .prefixSums(df, Seq(("ca", col("a"))), Nil, Seq("k"),
               numSlices = slices)
           graft.functions.GlobalRank
-            .prefixSum(c1, "cb", col("b"), Nil, Seq("k"),
+            .prefixSums(c1, Seq(("cb", col("b"))), Nil, Seq("k"),
               numSlices = slices)
             .select("k", "ca", "cb").as[(Long, Long, Long)]
             .collect().map(r => r._1 -> (r._2, r._3)).toMap
         }
         got == chained
+      } finally spark.conf.unset("graft.globalrank.smallThreshold")
+    }
+
+  // GlobalRank: every value binds to the INPUT on both routes. The
+  // first sum is named after its own input column `a`; the second value
+  // names `a` too and must read the input column, not the running sum.
+  property("prefix sum values read the input, never an earlier output") =
+    forAll(Gen.nonEmptyListOf(Gen.chooseNum(-50L, 50L)), Gen.chooseNum(2, 5),
+      Gen.oneOf(true, false)) { (vs, slices, forceSliced) =>
+      import spark.implicits._
+      if (forceSliced)
+        spark.conf.set("graft.globalrank.smallThreshold", "0")
+      else spark.conf.unset("graft.globalrank.smallThreshold")
+      try {
+        val df = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+          .toDF("k", "a")
+        val got = graft.functions.GlobalRank
+          .prefixSums(df, Seq(("a", col("a")), ("b", col("a"))),
+            Nil, Seq("k"), numSlices = slices)
+          .select("k", "a", "b").as[(Long, Long, Long)].collect()
+        val want = vs.scanLeft(0L)(_ + _).drop(1)
+        got.sortBy(_._1).toSeq == want.zipWithIndex.map { case (c, i) =>
+          (i.toLong, c, c) }
       } finally spark.conf.unset("graft.globalrank.smallThreshold")
     }
 
