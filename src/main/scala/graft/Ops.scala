@@ -63,6 +63,49 @@ object Det {
   def normExpr(a: String): String =
     s"sqrt(CAST(${dotDecExpr(a, a)} AS DOUBLE))"
 
+  /** Signed 1e6 fixed-point division `n·10⁶ / d`, truncated toward zero
+    * on both engines (`n`, `d` integer expressions, d > 0).
+    */
+  def signedFpDiv(n: String, d: String): String =
+    s"""CASE WHEN ($n) >= 0 THEN ($n) * 1000000 DIV ($d)
+       |ELSE -((-($n)) * 1000000 DIV ($d)) END""".stripMargin
+      .replace("\n", " ")
+
+  /** DuckDB side of [[signedFpDiv]]. The numerator is cast to HUGEINT
+    * BEFORE the ×10⁶, so the scaled product cannot overflow BIGINT; that
+    * is why this is not [[signedDivDuck]] over a pre-scaled numerator.
+    */
+  def signedFpDivDuck(n: String, d: String): String =
+    s"""CASE WHEN ($n) >= 0 THEN CAST(($n) AS HUGEINT) * 1000000 // ($d)
+       |ELSE -((-CAST(($n) AS HUGEINT)) * 1000000 // ($d)) END"""
+      .stripMargin.replace("\n", " ")
+
+  /** Unscaled signed division `n / d`, truncated toward zero on both
+    * engines; the caller scales `n` itself.
+    */
+  def signedDiv(n: String, d: String): String =
+    s"""CASE WHEN ($n) >= 0 THEN ($n) DIV ($d)
+       |ELSE -((-($n)) DIV ($d)) END""".stripMargin.replace("\n", " ")
+
+  /** DuckDB side of [[signedDiv]], in HUGEINT. */
+  def signedDivDuck(n: String, d: String): String =
+    s"""CASE WHEN ($n) >= 0 THEN CAST(($n) AS HUGEINT) // ($d)
+       |ELSE -((-CAST(($n) AS HUGEINT)) // ($d)) END"""
+      .stripMargin.replace("\n", " ")
+
+  /** Truncating (toward-zero) integer division as BIGINT, spelled so
+    * Spark and DuckDB agree on negative numerators.
+    */
+  def truncDivSpark(a: String, b: String): String =
+    s"CAST(CASE WHEN $a < 0 THEN -((-($a)) DIV ($b)) ELSE ($a) DIV ($b) END AS BIGINT)"
+
+  /** DuckDB side of [[truncDivSpark]]. */
+  def truncDivDuck(a: String, b: String): String =
+    s"CAST(CASE WHEN $a < 0 THEN -((-($a)) // ($b)) ELSE ($a) // ($b) END AS BIGINT)"
+
+  /** SQL for floor(e·10⁶) as BIGINT, the same text on both engines. */
+  def fp6(e: String): String = s"CAST(FLOOR(($e) * 1000000.0) AS BIGINT)"
+
   /** DuckDB side of [[dotDecExpr]]: requires `FROM ... CROSS JOIN
     * range(1, dim+1) t(i)` and a GROUP BY over the pair keys.
     */

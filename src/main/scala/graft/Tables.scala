@@ -5,50 +5,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Fixture-table loaders (TESTDATA.md). One parquet file per table under
   * `sfDir`. Columnar scan + Catalyst pushdown come for free; at 100 TB the
   * same call reads a partitioned directory instead of a single file, so no
-  * code here may assume single-file layout.
+  * code here may assume single-file layout. What it caches — relations per
+  * session, footer row counts per application — lives in [[SessionState]],
+  * which owns its lifetime.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Resolved-relation cache — the catalog-metadata cache every warehouse
-    * keeps: file listing + parquet footer schema are discovered ONCE per
-    * (session, path) and the analyzed relation is reused by every later
-    * query (fixtures are immutable per round, layouts write-once). Keyed
-    * by the session REFERENCE (SparkSession uses identity equality)
-    * because a DataFrame is bound to the session that analyzed it — an
-    * identityHashCode key could collide across live sessions and hand one
-    * session a plan analyzed by another. Entries are evicted when the
-    * session's context ends, so stopped test sessions don't pin their
-    * DataFrames forever. The DATA path is unaffected — each query still
-    * plans its own pruned columnar scan.
-    *
-    * A session's first read also installs the one-split scan planner
-    * strategy (the per-session fallback of `GraftExtensions`).
-    */
-  private val relations = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-
-  /** `spark.read.parquet(path)`, resolved once per session. Fixture
-    * tables and write-once layouts (`LlmOps`' dedup index) read through
-    * it: their listing and footer schema never change, and a fresh
+  /** `spark.read.parquet(path)`, resolved once per session — the
+    * catalog-metadata cache every warehouse keeps. Fixture tables and
+    * write-once layouts (`LlmOps`' dedup index) read through it: their
+    * listing and footer schema never change, and a fresh
     * `s.read.parquet` would re-run parquet schema inference — a Spark
-    * job — inside every query that reads them.
+    * job — inside every query that reads them. The DATA path is
+    * unaffected: each query still plans its own pruned columnar scan.
+    *
+    * The relation is bound to the session that analyzed it, so it lives
+    * in [[SessionState]]'s session scope, which also drops it when the
+    * application ends. A session's first read installs the one-split
+    * scan planner strategy (the per-session fallback of
+    * `GraftExtensions`).
     */
-  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
-    relations.computeIfAbsent(spark, s => {
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-            relations.remove(s)
-        })
-      if (!s.experimental.extraStrategies.contains(graft.plans.OneSplitScanStrategy))
-        s.experimental.extraStrategies =
-          s.experimental.extraStrategies :+ graft.plans.OneSplitScanStrategy
-      new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-    }).computeIfAbsent(path, p => spark.read.parquet(p))
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame = {
+    val state = SessionState.session(spark)
+    state("Tables.oneSplitScan", ()) {
+      if (!spark.experimental.extraStrategies.contains(graft.plans.OneSplitScanStrategy))
+        spark.experimental.extraStrategies =
+          spark.experimental.extraStrategies :+ graft.plans.OneSplitScanStrategy
+      graft.plans.OneSplitScanStrategy
+    }
+    state("Tables.relation", path)(spark.read.parquet(path))
+  }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     parquet(spark, s"$dir/$name.parquet")
@@ -137,14 +126,11 @@ object Tables {
     * footer read per file, the same work any catalog does at plan time.
     * Exactness: parquet footers record per-row-group counts written at
     * commit time; with no filter and no deletes (fixtures are immutable
-    * per round) their sum IS count(*). Cached per (dir, table) beside
-    * the relation cache, same lifetime.
+    * per round) their sum IS count(*). Memoized per (dir, table) in
+    * [[SessionState]]'s application scope.
     */
-  private val rowCounts =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
   def rowCount(s: SparkSession, dir: String, name: String): Long =
-    rowCounts.computeIfAbsent((dir, name), { _ =>
+    SessionState.application(s)("Tables.rowCount", (dir, name)) {
       val conf = s.sessionState.newHadoopConf()
       val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
       val fs = root.getFileSystem(conf)
@@ -157,5 +143,5 @@ object Tables {
           org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
         try r.getRecordCount finally r.close()
       }.sum
-    })
+    }
 }

@@ -69,65 +69,14 @@ object GlobalRank {
 
   private val ThresholdKey = "graft.globalrank.smallThreshold"
 
-  /** Checkpoint RDDs created by the sliced paths, per session. The
-    * returned plan still reads the checkpointed RDD, so it cannot be
-    * unpersisted inside rowNumber/prefixSum. Both the session key and
-    * the RDDs are held WEAKLY: a caller that simply drops its plans
-    * falls back to the pre-registry behavior — the ContextCleaner
-    * reclaims the blocks once the RDD is unreachable — instead of this
-    * registry pinning executor storage (and the session object)
-    * forever. [[releaseCheckpoints]] is therefore an EAGER reclaim for
-    * long-lived sessions running many sliced rankings, not an
-    * obligation.
+  /** Eagerly unpersist every still-reachable pin this session made —
+    * the sliced paths' snapshots and every [[Checkpoints.pin]]. The
+    * registry and its lifetime belong to [[Checkpoints]] (session scope
+    * in `graft.SessionState`); this stays the entry point that harnesses
+    * call between queries. Returns the number of pins released.
     */
-  private val snapshots = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[
-      org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentLinkedQueue[
-        java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]]())
-
-  /** Registry hook for [[Checkpoints.pin]] — a `localCheckpoint` whose
-    * RDD is tracked in this session's snapshot registry, so the
-    * harness's post-query `releaseCheckpoints` reclaims it eagerly
-    * (ADVICE r18: raw `.localCheckpoint()` pins bypassed the registry
-    * and accrued executor storage until GC).
-    */
-  private[functions] def trackedSnapshot(df: DataFrame): DataFrame =
-    snapshot(df)
-
-  private def snapshot(df: DataFrame): DataFrame = {
-    val snap = df.localCheckpoint()
-    snap.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        snapshots.computeIfAbsent(df.sparkSession,
-          _ => new java.util.concurrent.ConcurrentLinkedQueue[
-            java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]())
-          .add(new java.lang.ref.WeakReference(l.rdd))
-      case _ => // not an RDD-backed snapshot — nothing persisted
-    }
-    snap
-  }
-
-  /** Eagerly unpersist every still-reachable checkpoint snapshot this
-    * session's sliced rank/prefix-sum calls created. Safe only once the
-    * plans returned by those calls have been fully consumed (a later
-    * re-execution of such a plan would recompute from a missing block
-    * and fail). Snapshots whose plans were already garbage-collected are
-    * reclaimed by the ContextCleaner and skipped here. Returns the
-    * number of snapshots released.
-    */
-  def releaseCheckpoints(spark: org.apache.spark.sql.SparkSession): Int = {
-    val q = snapshots.remove(spark)
-    if (q == null) 0
-    else {
-      var n = 0
-      q.forEach { ref =>
-        val rdd = ref.get()
-        if (rdd != null) { rdd.unpersist(blocking = false); n += 1 }
-      }
-      n
-    }
-  }
+  def releaseCheckpoints(spark: org.apache.spark.sql.SparkSession): Int =
+    Checkpoints.releasePins(spark)
 
   /** Routing-pass cost guard (r18 optimization), OPT-IN per call site:
     * the measuring pass (count, and on the sliced path quantile bounds)
@@ -268,7 +217,7 @@ object GlobalRank {
       // instead, and callers reclaim the storage with
       // releaseCheckpoints(spark) once their plans are consumed.
       // (pinIfDerived may already have pinned — never snapshot twice.)
-      val snap = if (input eq df) snapshot(df) else input
+      val snap = if (input eq df) Checkpoints.pin(df) else input
       val stats = measureBounds(snap, base, groupCols, numSlices)
       val slice = "__gr_pid" +: groupCols
       val sliced = withSlice(snap, base, groupCols, numSlices, stats)
@@ -338,7 +287,7 @@ object GlobalRank {
         acc.withColumn(name, sum(col(vn)).over(w))
       }.drop(vals: _*)
     } else {
-      val snap = if (input eq df) snapshot(df) else input
+      val snap = if (input eq df) Checkpoints.pin(df) else input
       val stats = measureBounds(snap, base, groupCols, numSlices)
       val slice = "__gr_pid" +: groupCols
       val sliced = withValues(withSlice(snap, base, groupCols, numSlices, stats))
@@ -444,7 +393,7 @@ object GlobalRank {
       val snap =
         if (input.queryExecution.analyzed.isInstanceOf[
           org.apache.spark.sql.execution.LogicalRDD]) input
-        else snapshot(input)
+        else Checkpoints.pin(input)
       val stats = measureBounds(snap, base, Nil, numSlices)
       val sliced = withSlice(snap, base, Nil, numSlices, stats)
       val w = Window.partitionBy("__gr_pid").orderBy(orderCols.map(col): _*)

@@ -37,10 +37,9 @@ object GraphOps {
     * (component diameters in the in-repo dedup/kNN graphs are tiny, so
     * the fixpoint lands in a handful of rounds); the collected
     * union-find route always reaches the exact fixpoint and does not
-    * read it. A graph that still has label changes at maxIters is
-    * warned about loudly on stderr — the two routes would disagree
-    * there, and the truncation is a correctness smell, not a feature
-    * (ADVICE r18).
+    * read it. A graph that still has label changes at maxIters throws
+    * `IllegalStateException`: its labels would not be the component
+    * fixpoint and would disagree with the union-find route.
     *
     * Driver-route guards (r19): every in-repo caller bounds edges at
     * ≤ 6·|V| rows by the kNN/band-cap construction, but the primitive
@@ -137,11 +136,13 @@ object GraphOps {
       labels = next.select(col(idCol), col("component"))
       iters += 1
     }
-    if (changed > 0)
-      System.err.println(s"[graphops] connectedComponents stopped at " +
-        s"maxIters=$maxIters with $changed labels still changing - " +
-        "output is NOT the component fixpoint; raise maxIters")
     Checkpoints.release(und)
+    if (changed > 0) {
+      Checkpoints.release(snap)
+      throw new IllegalStateException(s"connectedComponents stopped at " +
+        s"maxIters=$maxIters with $changed labels still changing; the " +
+        "labels are not the component fixpoint")
+    }
     labels
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{OpGroup, Tables}
+import graft.Det.{signedDiv, signedDivDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,15 +30,6 @@ import org.apache.spark.sql.functions._
   *     engines; all state is strata-bounded.
   */
 object CausalEvalOps extends OpGroup {
-
-  private def signedFpDiv(n: String, d: String): String =
-    s"""CASE WHEN ($n) >= 0 THEN ($n) DIV ($d)
-       |ELSE -((-($n)) DIV ($d)) END""".stripMargin.replace("\n", " ")
-
-  private def signedFpDivDuck(n: String, d: String): String =
-    s"""CASE WHEN ($n) >= 0 THEN CAST(($n) AS HUGEINT) // ($d)
-       |ELSE -((-CAST(($n) AS HUGEINT)) // ($d)) END"""
-      .stripMargin.replace("\n", " ")
 
   /** SMD = (m₁−m₀)/√((s₁²+s₀²)/2) as ONE terminal IEEE expression over
     * the exact per-arm moment set, rounded 6dp; NULL-guarded on a
@@ -146,11 +138,11 @@ object CausalEvalOps extends OpGroup {
           sum("nt").as("n_treated_matched"),
           sum("nc").as("n_control_matched"),
           sum(expr("nt * (" +
-            signedFpDiv("st * 1000000", "nt") + " - " +
-            signedFpDiv("sc * 1000000", "nc") + ")")).as("att_mass"))
+            signedDiv("st * 1000000", "nt") + " - " +
+            signedDiv("sc * 1000000", "nc") + ")")).as("att_mass"))
         .crossJoin(broadcast(totals))
         .withColumn("att_fp",
-          expr(signedFpDiv("att_mass", "n_treated_matched")))
+          expr(signedDiv("att_mass", "n_treated_matched")))
         .select("n_strata_total", "n_strata_matched", "n_treated_matched",
           "n_control_matched", "att_fp")
     }),
@@ -176,13 +168,13 @@ object CausalEvalOps extends OpGroup {
           sum(expr("CAST(xc AS DECIMAL(38,0)) * y")).as("sxy"))
         .withColumn("den", expr(
           "CAST(n AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx"))
-        .withColumn("a_fp", expr(s"""CASE WHEN den > 0 THEN ${signedFpDiv(
+        .withColumn("a_fp", expr(s"""CASE WHEN den > 0 THEN ${signedDiv(
             """(CAST(sy AS DECIMAL(38,0)) * sxx
               | - CAST(sx AS DECIMAL(38,0)) * sxy) * 1000000"""
               .stripMargin.replace("\n", " "), "den")}
            |ELSE CAST(NULL AS BIGINT) END""".stripMargin.replace("\n", " "))
           .cast("long"))
-        .withColumn("b_fp", expr(s"""CASE WHEN den > 0 THEN ${signedFpDiv(
+        .withColumn("b_fp", expr(s"""CASE WHEN den > 0 THEN ${signedDiv(
             """(CAST(n AS DECIMAL(38,0)) * sxy
               | - CAST(sx AS DECIMAL(38,0)) * sy) * 1000000"""
               .stripMargin.replace("\n", " "), "den")}
@@ -289,9 +281,9 @@ object CausalEvalOps extends OpGroup {
           sum(when(col("arm") === 1, col("sx"))).as("sx1"),
           sum(when(col("arm") === 0, col("sxx"))).as("sxx0"),
           sum(when(col("arm") === 1, col("sxx"))).as("sxx1"))
-        .withColumn("m0_fp", expr(signedFpDiv(
+        .withColumn("m0_fp", expr(signedDiv(
           "CAST(sx0 AS DECIMAL(38,0)) * 1000000", "n0")).cast("long"))
-        .withColumn("m1_fp", expr(signedFpDiv(
+        .withColumn("m1_fp", expr(signedDiv(
           "CAST(sx1 AS DECIMAL(38,0)) * 1000000", "n1")).cast("long"))
         .withColumn("smd", expr(smdSql))
         .withColumn("balanced", expr(
@@ -450,13 +442,13 @@ object CausalEvalOps extends OpGroup {
          |  SELECT CAST(count(*) AS BIGINT) AS n_strata_matched,
          |         CAST(sum(nt) AS BIGINT) AS n_treated_matched,
          |         CAST(sum(nc) AS BIGINT) AS n_control_matched,
-         |         CAST(sum(nt * (${signedFpDivDuck("st * 1000000", "nt")}
-         |           - ${signedFpDivDuck("sc * 1000000", "nc")})) AS BIGINT)
+         |         CAST(sum(nt * (${signedDivDuck("st * 1000000", "nt")}
+         |           - ${signedDivDuck("sc * 1000000", "nc")})) AS BIGINT)
          |           AS att_mass
          |  FROM strata WHERE nt > 0 AND nc > 0)
          |SELECT t.n_strata_total, m.n_strata_matched, m.n_treated_matched,
          |       m.n_control_matched,
-         |       CAST(${signedFpDivDuck("m.att_mass", "m.n_treated_matched")}
+         |       CAST(${signedDivDuck("m.att_mass", "m.n_treated_matched")}
          |         AS BIGINT) AS att_fp
          |FROM m CROSS JOIN tot t""".stripMargin,
 
@@ -496,9 +488,9 @@ object CausalEvalOps extends OpGroup {
          |    sum(CASE WHEN arm = 1 THEN sxx END) AS sxx1
          |  FROM m GROUP BY 1)
          |SELECT covariate, n0, n1,
-         |       CAST(${signedFpDivDuck("sx0 * 1000000", "n0")} AS BIGINT)
+         |       CAST(${signedDivDuck("sx0 * 1000000", "n0")} AS BIGINT)
          |         AS m0_fp,
-         |       CAST(${signedFpDivDuck("sx1 * 1000000", "n1")} AS BIGINT)
+         |       CAST(${signedDivDuck("sx1 * 1000000", "n1")} AS BIGINT)
          |         AS m1_fp,
          |       $smdSql AS smd,
          |       CASE WHEN $smdSql IS NULL THEN NULL
@@ -560,10 +552,10 @@ object CausalEvalOps extends OpGroup {
          |fits AS (
          |  SELECT r, n,
          |         CASE WHEN den > 0 THEN
-         |           CAST(${signedFpDivDuck("anum", "den")} AS BIGINT)
+         |           CAST(${signedDivDuck("anum", "den")} AS BIGINT)
          |         ELSE NULL END AS a_fp,
          |         CASE WHEN den > 0 THEN
-         |           CAST(${signedFpDivDuck("bnum", "den")} AS BIGINT)
+         |           CAST(${signedDivDuck("bnum", "den")} AS BIGINT)
          |         ELSE NULL END AS b_fp
          |  FROM f)
          |SELECT

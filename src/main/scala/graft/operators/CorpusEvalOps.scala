@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{OpGroup, Tables}
+import graft.Det.{signedFpDiv, signedFpDivDuck, truncDivSpark, truncDivDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,17 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object CorpusEvalOps extends OpGroup {
 
-  /** Signed 1e6 fixed-point division, toward-zero on both engines. */
-  private def signedFpDiv(n: String, d: String): String =
-    s"""CASE WHEN ($n) >= 0 THEN ($n) * 1000000 DIV ($d)
-       |ELSE -((-($n)) * 1000000 DIV ($d)) END""".stripMargin
-      .replace("\n", " ")
-
-  private def signedFpDivDuck(n: String, d: String): String =
-    s"""CASE WHEN ($n) >= 0 THEN CAST(($n) AS HUGEINT) * 1000000 // ($d)
-       |ELSE -((-CAST(($n) AS HUGEINT)) * 1000000 // ($d)) END"""
-      .stripMargin.replace("\n", " ")
-
   /** Stupid-backoff log-score of an eval bigram type, over exact
     * integer counts: seen ⇒ ln(cb/cu); unseen ⇒ ln(0.4·(cw+1)/(T+V)).
     */
@@ -56,10 +46,6 @@ object CorpusEvalOps extends OpGroup {
     * toward-zero division both engines agree on for negative z.
     */
   private val BurrowsK = 20
-  private def truncDivSpark(a: String, b: String) =
-    s"CAST(CASE WHEN $a < 0 THEN -((-($a)) DIV ($b)) ELSE ($a) DIV ($b) END AS BIGINT)"
-  private def truncDivDuck(a: String, b: String) =
-    s"CAST(CASE WHEN $a < 0 THEN -((-($a)) // ($b)) ELSE ($a) // ($b) END AS BIGINT)"
 
   /** 2·SE MinHash-estimator bound 2·√(J(1−J)/k) in 1e-6 fixed point,
     * spelled over the exact (inter, un) integers so both engines build

@@ -39,18 +39,18 @@ object CurationOps extends OpGroup {
     s"graft_buckets_${math.abs(d.hashCode)}"
 
   /** Bucketing is a WRITE-TIME investment amortized over every later
-    * join — so the tables are written once per (session, dataset), like
-    * the IVF quantizer, not on every query invocation.
+    * join — so the tables are written once per (application, dataset),
+    * like the IVF quantizer, not on every query invocation. The catalog
+    * that holds them is the application's, so the memo is application
+    * scope in [[graft.SessionState]].
     */
-  private val bucketedReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def ensureBucketed(s: SparkSession, d: String): String =
-    bucketedReady.computeIfAbsent(d, _ => {
+    graft.SessionState.application(s)("CurationOps.bucketed", d) {
       val db = bucketDb(d)
-      // session-unique location: the in-memory catalog forgets managed
+      // application-unique location: the in-memory catalog forgets managed
       // tables across JVMs, but their files would survive and collide
       s.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION " +
-        s"'/tmp/graft_warehouse/${s.sparkContext.applicationId}/$db'")
+        s"'${graft.SessionState.appDir(s, "graft_warehouse")}/$db'")
       Tables.orders(s, d).select("o_orderkey", "o_orderpriority")
         .write.mode(SaveMode.Overwrite)
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
@@ -60,7 +60,7 @@ object CurationOps extends OpGroup {
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .saveAsTable(s"$db.lineitem_b")
       db
-    })
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // One-pass column profiler — the data-profiling stage of intake: one

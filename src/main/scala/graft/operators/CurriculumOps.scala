@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{OpGroup, Tables}
+import graft.Det.{signedFpDiv, signedFpDivDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,16 +29,6 @@ import org.apache.spark.sql.functions._
 object CurriculumOps extends OpGroup {
 
   private val Blocklist = Seq("slow", "error", "dup", "stale", "skew")
-
-  private def signedFpDiv(n: String, d: String): String =
-    s"""CASE WHEN ($n) >= 0 THEN ($n) * 1000000 DIV ($d)
-       |ELSE -((-($n)) * 1000000 DIV ($d)) END""".stripMargin
-      .replace("\n", " ")
-
-  private def signedFpDivDuck(n: String, d: String): String =
-    s"""CASE WHEN ($n) >= 0 THEN CAST(($n) AS HUGEINT) * 1000000 // ($d)
-       |ELSE -((-CAST(($n) AS HUGEINT)) * 1000000 // ($d)) END"""
-      .stripMargin.replace("\n", " ")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Ten curriculum stages by ascending quality proxy; per stage the

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{OpGroup, Tables}
+import graft.Det.fp6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,8 +52,6 @@ object DistShapeOps extends OpGroup {
   private val exkS = s"($m4S / ($m2S * $m2S) - 3.0)"
   private val jbS =
     s"(CAST(n AS DOUBLE) / 6.0 * ($skewS * $skewS + $exkS * $exkS / 4.0))"
-
-  private def fp6(e: String) = s"CAST(FLOOR(($e) * 1000000.0) AS BIGINT)"
 
   /** vn = n·s2 − s1² > 0 is the EXACT zero-variance guard (a double
     * m2 could read 0 < tiny ≠ 0 differently per engine).

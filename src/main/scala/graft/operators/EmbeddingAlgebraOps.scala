@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{OpGroup, Tables}
+import graft.Det.{truncDivSpark, truncDivDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,14 +55,6 @@ object EmbeddingAlgebraOps extends OpGroup {
   /** Leaf fixed-point of the float embedding, as an int64 array. */
   private val fxArr =
     expr("transform(embedding, x -> CAST(CAST(x AS DOUBLE) * 1000000 AS BIGINT))")
-
-  /** Truncating (toward-zero) integer division of two exact decimals,
-    * spelled so Spark and DuckDB agree on negative numerators.
-    */
-  private def truncDivSpark(a: String, b: String) =
-    s"CAST(CASE WHEN $a < 0 THEN -((-($a)) DIV ($b)) ELSE ($a) DIV ($b) END AS BIGINT)"
-  private def truncDivDuck(a: String, b: String) =
-    s"CAST(CASE WHEN $a < 0 THEN -((-($a)) // ($b)) ELSE ($a) // ($b) END AS BIGINT)"
 
   /** Exact DECIMAL(38,0) reconstruction of a GramCell limb pair. */
   private val cellSum =

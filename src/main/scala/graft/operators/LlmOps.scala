@@ -33,7 +33,7 @@ object LlmOps extends OpGroup {
     */
   private[graft] val JaccardDfCap = 50
 
-  /** MinHash signature layout, persisted once per (session, dataset):
+  /** MinHash signature layout, persisted once per (application, dataset):
     * 16 seeded xxhash64 minima over word 3-gram shingles per document.
     * The hash VALUES are Spark-specific, but persisting them as parquet
     * makes them plain input data — the banding, candidate pairing, and

@@ -62,7 +62,7 @@ object MultimodalOps extends OpGroup {
     }
   }
 
-  /** One media file per sampled document, staged once per (session,
+  /** One media file per sampled document, staged once per (application,
     * dataset) — the on-disk form a media corpus actually arrives in
     * (one object per image/clip). Driver-side staging is write-once
     * fixture generation (the SourceOps.stagePages pattern), not query
@@ -84,7 +84,7 @@ object MultimodalOps extends OpGroup {
     }
 
   /** Perceptual-hash layout: one 64-bit signature per media object,
-    * persisted once per (session, dataset) — the media-dedup index a
+    * persisted once per (application, dataset) — the media-dedup index a
     * production lake maintains next to the objects. The SIGNATURE
     * function is the decode stub's analog: a real pipeline computes
     * pHash/aHash over decoded downsampled pixels; no codecs ship here,

@@ -56,24 +56,6 @@ object PipelineOps extends OpGroup {
   private def freshDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  /** Staging-parallelism knob for the BATCHING-INVARIANT streaming keys
-    * (T1 pass-through, T9 stateless enrich) — ADVICE r17 #1: at sf0.01
-    * the events fixture is ONE read split, so the staged JSON was one
-    * file and BenchStream's 1-file-per-trigger leg produced one
-    * micro-batch while claiming `cpus`. When
-    * `graft.stream.stageParts` is set (BenchStream's batch axis), the
-    * staging write repartitions to that many files so the per-trigger
-    * leg has a real batch sequence to price; unset (production, Verify,
-    * the oracle) the natural read-split count stands. Only keys whose
-    * RESULT is batching-invariant honor it — T5/T10/T17 pin their own
-    * staging because their batching is semantics.
-    */
-  private def stagePartsKnob(s: SparkSession, df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    s.conf.getOption("graft.stream.stageParts")
-      .flatMap(v => scala.util.Try(v.toInt).toOption).filter(_ > 0)
-      .map(df.repartition(_)).getOrElse(df)
-
   /** Runs `body` with `spark.sql.shuffle.partitions` pinned to `n`,
     * restoring the caller's value after. A stateful stream materializes
     * ONE state-store instance (directory, snapshot/maintenance files,
@@ -170,9 +152,9 @@ object PipelineOps extends OpGroup {
       val ckpt = freshDir("graft_t1_ckpt")
       val schema =
         StructType.fromDDL("event_id LONG, ts_us LONG, event_type STRING, value DOUBLE")
-      stagePartsKnob(s, Tables.events(s, d)
+      Tables.events(s, d)
         .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_type"), col("value")))
+          col("event_type"), col("value"))
         .write.mode(SaveMode.Overwrite).json(stage)
       val q = StreamingOps.fileJsonStream(s, schema, stage)
         .writeStream.format("parquet").option("path", sink)
@@ -389,8 +371,8 @@ object PipelineOps extends OpGroup {
       val stage = freshDir("graft_t9_stage")
       val sink = freshDir("graft_t9_sink")
       val ckpt = freshDir("graft_t9_ckpt")
-      stagePartsKnob(s, Tables.events(s, d)
-        .select(col("event_id"), col("user_id"), col("event_type")))
+      Tables.events(s, d)
+        .select(col("event_id"), col("user_id"), col("event_type"))
         .write.mode(SaveMode.Overwrite).json(stage)
       val dim = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"))

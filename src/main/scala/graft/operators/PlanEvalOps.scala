@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{OpGroup, Tables}
+import graft.Det.{truncDivSpark, truncDivDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,12 +55,6 @@ object PlanEvalOps extends OpGroup {
   /** winnowing k (tokens per gram) and window w (grams per window). */
   private val GramK = 3
   private val WinW = 4
-
-  /** Sign-explicit toward-zero integer division (house pattern). */
-  private def truncDivSpark(a: String, b: String) =
-    s"CAST(CASE WHEN $a < 0 THEN -((-($a)) DIV ($b)) ELSE ($a) DIV ($b) END AS BIGINT)"
-  private def truncDivDuck(a: String, b: String) =
-    s"CAST(CASE WHEN $a < 0 THEN -((-($a)) // ($b)) ELSE ($a) // ($b) END AS BIGINT)"
 
   /** One fact join to profile: (name, tableA, keyA, tableB, keyB). */
   private case class JoinCase(name: String, a: String, ka: String,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{OpGroup, Tables}
+import graft.Det.{signedFpDiv, signedFpDivDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -48,14 +49,6 @@ object RankStatOps extends OpGroup {
        |ELSE round(CAST($num AS DOUBLE)
        |  / (sqrt(CAST($dx AS DOUBLE)) * sqrt(CAST($dy AS DOUBLE))), 6)
        |END""".stripMargin.replace("\n", " ")
-
-  /** Signed fixed-point scale-then-divide, truncation toward zero on
-    * both engines (`n`, `d` integer expressions, d > 0).
-    */
-  private def signedFpDiv(n: String, d: String): String =
-    s"""CASE WHEN ($n) >= 0 THEN ($n) * 1000000 DIV ($d)
-       |ELSE -((-($n)) * 1000000 DIV ($d)) END""".stripMargin
-      .replace("\n", " ")
 
   /** Month×priority revenue cells over COMPLETE blocks (all 5
     * priorities present), with within-block doubled tie-averaged
@@ -122,11 +115,6 @@ object RankStatOps extends OpGroup {
       |           AS BIGINT) AS r2
       |  FROM kept k JOIN kept o ON o.blk = k.blk
       |  GROUP BY k.blk, k.sc, k.v)""".stripMargin
-
-  private def signedFpDivDuck(n: String, d: String): String =
-    s"""CASE WHEN ($n) >= 0 THEN CAST(($n) AS HUGEINT) * 1000000 // ($d)
-       |ELSE -((-CAST(($n) AS HUGEINT)) * 1000000 // ($d)) END"""
-      .stripMargin.replace("\n", " ")
 
   /** Per-cell χ² contribution (O−E)²/E in 1e-6 fixed point (the
     * InfoStatOps chi2 leaf, re-spelled here over the margins' names).

@@ -73,7 +73,7 @@ object ScaleOps extends OpGroup {
     }),
   )
 
-  /** UDAF-signature layout, persisted once per (session, dataset): the
+  /** UDAF-signature layout, persisted once per (application, dataset): the
     * `udaf(MinHashSignature(8))` pipeline's (doc_id, sig) output. FNV
     * hash values are engine-specific, but persisting them makes them
     * input data for the engine-independent banding downstream.

@@ -24,18 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object SemiStructuredOps extends OpGroup {
 
-  /** One quantizer (k centroids) per dataset, fitted lazily on the
-    * shared fit sample and reused by every invocation — at 100 TB the
-    * model is fitted offline on a sample and persisted next to the
-    * table; re-training inside a query would be wrong by construction.
-    * k=4 cells: the fixture embeddings are directionally near-uniform
-    * (AnnSpec measures the recall ceilings), so fewer, larger cells is
-    * the honest recall/efficiency point for THIS corpus; clustered
-    * corpora take a larger k (AnnSpec's planted-cluster test runs k=8).
-    */
-  private val quantizers =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-
   /** Target cell population for the coarse quantizer. k scales as
     * ⌈n / TargetCellSize⌉ (floored at 4) so Σ|cell|² — the candidate
     * count of every cell equi-join (knn_graph_topk, semantic_dedup,
@@ -51,13 +39,29 @@ object SemiStructuredOps extends OpGroup {
     */
   private val TargetCellSize = 500L
 
+  /** The md5-ordered fit sample of the dataset's embeddings
+    * ([[graft.functions.AnnPq.fitSample]]), collected once per
+    * application and shared by the IVF and PQ fits.
+    */
+  private def fitSample(s: SparkSession, d: String): Array[Array[Float]] =
+    graft.SessionState.application(s)("SemiStructuredOps.fitSample", d)(
+      graft.functions.AnnPq.fitSample(Tables.embeddings(s, d)))
+
+  /** One quantizer (k centroids) per dataset, fitted lazily on the
+    * shared fit sample and reused by every invocation — at 100 TB the
+    * model is fitted offline on a sample and persisted next to the
+    * table; re-training inside a query would be wrong by construction.
+    * k=4 cells: the fixture embeddings are directionally near-uniform
+    * (AnnSpec measures the recall ceilings), so fewer, larger cells is
+    * the honest recall/efficiency point for THIS corpus; clustered
+    * corpora take a larger k (AnnSpec's planted-cluster test runs k=8).
+    */
   private def quantizer(s: SparkSession, d: String): Array[Array[Double]] =
-    quantizers.computeIfAbsent(d, _ => {
+    graft.SessionState.application(s)("SemiStructuredOps.quantizer", d) {
       val n = Tables.rowCount(s, d, "embeddings")
       val k = math.max(4L, (n + TargetCellSize - 1) / TargetCellSize).toInt
-      graft.functions.AnnIvf.fitQuantizer(
-        graft.functions.AnnPq.fitSample(Tables.embeddings(s, d)), k)
-    })
+      graft.functions.AnnIvf.fitQuantizer(fitSample(s, d), k)
+    }
 
   /** The FROZEN coarse quantizer, exposed for the CDC-incremental IVF
     * maintenance path (IncrementalIvfOps): fresh vectors must quantize
@@ -73,7 +77,7 @@ object SemiStructuredOps extends OpGroup {
       : Array[Array[Array[Double]]] = pqCodebook(s, d)
 
   /** Write-time-indexed serving layout: the corpus persisted as parquet
-    * PARTITIONED BY its quantizer cell, once per (session, dataset) —
+    * PARTITIONED BY its quantizer cell, once per (application, dataset) —
     * "assign cells at write time" made literal. Probing this layout can
     * skip whole cell directories (dynamic partition pruning; PlanSpec
     * asserts it) instead of scanning the corpus. The centroids (k rows of
@@ -147,14 +151,11 @@ object SemiStructuredOps extends OpGroup {
     * offline model fitting. m=8 subspaces, k=16
     * codes: 64-dim float32 → 8 small ints, ~32× scan compression.
     */
-  private val pqCodebooks = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Array[Double]]]]()
-
   private def pqCodebook(s: SparkSession, d: String): Array[Array[Array[Double]]] =
-    pqCodebooks.computeIfAbsent(d, _ => graft.functions.AnnPq.fitCodebooks(
-      graft.functions.AnnPq.fitSample(Tables.embeddings(s, d)), m = 8, k = 16))
+    graft.SessionState.application(s)("SemiStructuredOps.pqCodebook", d)(
+      graft.functions.AnnPq.fitCodebooks(fitSample(s, d), m = 8, k = 16))
 
-  /** PQ serving layout, written once per (session, dataset): the
+  /** PQ serving layout, written once per (application, dataset): the
     * normalized vectors + their codes as one parquet, the codebook
     * flattened to (j, code, idx, val) rows as a sibling — the learned
     * model's output as plain INPUT DATA, so the DuckDB oracle re-derives

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{OpGroup, Tables}
+import graft.Det.{signedFpDiv, signedFpDivDuck, fp6}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,20 +38,6 @@ import org.apache.spark.sql.functions._
 object SeriesStatOps extends OpGroup {
 
   private val MaxLag = 7
-
-  /** Signed 1e6 fixed-point division, toward-zero on both engines. */
-  private def signedFpDiv(n: String, d: String): String =
-    s"""CASE WHEN ($n) >= 0 THEN ($n) * 1000000 DIV ($d)
-       |ELSE -((-($n)) * 1000000 DIV ($d)) END""".stripMargin
-      .replace("\n", " ")
-
-  private def signedFpDivDuck(n: String, d: String): String =
-    s"""CASE WHEN ($n) >= 0 THEN CAST(($n) AS HUGEINT) * 1000000 // ($d)
-       |ELSE -((-CAST(($n) AS HUGEINT)) * 1000000 // ($d)) END"""
-      .stripMargin.replace("\n", " ")
-
-  private[operators] def fp6(e: String): String =
-    s"CAST(FLOOR(($e) * 1000000.0) AS BIGINT)"
 
   /** Shared-text Dickey–Fuller leaves over the exact regression
     * moments (n, sx, sy, sxx, sxy, syy, den) — β̂ and its t-ratio,
@@ -997,9 +984,9 @@ object SeriesStatOps extends OpGroup {
         .withColumn("den",
           expr("CAST(n AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx"))
         .select(col("n").as("n_pairs"),
-          expr(s"CASE WHEN $adfGuard THEN ${SeriesStatOps.fp6(adfBetaS)} " +
+          expr(s"CASE WHEN $adfGuard THEN ${fp6(adfBetaS)} " +
             "ELSE CAST(NULL AS BIGINT) END").as("beta_fp"),
-          expr(s"CASE WHEN $adfGuard THEN ${SeriesStatOps.fp6(adfTS)} " +
+          expr(s"CASE WHEN $adfGuard THEN ${fp6(adfTS)} " +
             "ELSE CAST(NULL AS BIGINT) END").as("df_t_fp"))
     }),
 

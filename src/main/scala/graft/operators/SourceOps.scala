@@ -65,19 +65,13 @@ object SourceOps extends OpGroup {
   /** Fixture staging for the DSv2 paged source: the part keys, sorted,
     * cut into 50-row ndjson page files — the on-disk twin of the
     * reference API's page responses (app.py:154-163). Write-once per
-    * (session, dataset); driver-side because it GENERATES the fixture the
-    * source under test reads (the declared query itself stays fully
-    * distributed).
+    * (application, dataset), memoized in [[graft.SessionState]];
+    * driver-side because it GENERATES the fixture the source under test
+    * reads (the declared query itself stays fully distributed).
     */
-  private val pagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val sinkDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def stagePages(s: SparkSession, d: String): String =
-    pagedDirs.computeIfAbsent(d, _ => {
-      val dir = s"/tmp/graft_paged/${s.sparkContext.applicationId}/${math.abs(d.hashCode)}"
+    graft.SessionState.application(s)("SourceOps.pagedDir", d) {
+      val dir = s"${graft.SessionState.appDir(s, "graft_paged")}/${math.abs(d.hashCode)}"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
       val keys = Tables.part(s, d).select("p_partkey")
         .orderBy("p_partkey").collect().map(_.getLong(0))
@@ -97,7 +91,7 @@ object SourceOps extends OpGroup {
         java.nio.file.Paths.get(s"$dir/_manifest.ndjson"),
         manifest.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       dir
-    })
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "scan_json_schema" -> scanJsonSchema,
@@ -109,8 +103,8 @@ object SourceOps extends OpGroup {
     // pattern) and come back IN through the V2 reader off that manifest.
     // The oracle asserts the round trip is the identity on the key set.
     "paged_sink_roundtrip" -> ((s, d) => {
-      val out = sinkDirs.computeIfAbsent(d, _ => {
-        val dir = s"/tmp/graft_pagedsink/${s.sparkContext.applicationId}/${math.abs(d.hashCode)}"
+      val out = graft.SessionState.application(s)("SourceOps.sinkDir", d) {
+        val dir = s"${graft.SessionState.appDir(s, "graft_pagedsink")}/${math.abs(d.hashCode)}"
         Tables.part(s, d)
           .select(col("p_partkey"), lit(0).as("page"))
           .repartitionByRange(col("p_partkey"))
@@ -118,7 +112,7 @@ object SourceOps extends OpGroup {
           .write.format("graft.sources.PagedJsonSource")
           .option("path", dir).mode(SaveMode.Overwrite).save()
         dir
-      })
+      }
       s.read.format("graft.sources.PagedJsonSource")
         .option("path", out).load()
         .select("p_partkey").orderBy("p_partkey")

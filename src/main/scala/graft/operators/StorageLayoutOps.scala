@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{OpGroup, Tables}
+import graft.Det.{signedFpDiv, signedFpDivDuck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,20 +33,8 @@ import org.apache.spark.sql.functions._
   */
 object StorageLayoutOps extends OpGroup {
 
-  /** Signed 1e6 fixed-point division, toward-zero on both engines. */
-  private def signedFpDiv(n: String, d: String): String =
-    s"""CASE WHEN ($n) >= 0 THEN ($n) * 1000000 DIV ($d)
-       |ELSE -((-($n)) * 1000000 DIV ($d)) END""".stripMargin
-      .replace("\n", " ")
-
-  private def signedFpDivDuck(n: String, d: String): String =
-    s"""CASE WHEN ($n) >= 0 THEN CAST(($n) AS HUGEINT) * 1000000 // ($d)
-       |ELSE -((-CAST(($n) AS HUGEINT)) * 1000000 // ($d)) END"""
-      .stripMargin.replace("\n", " ")
-
   private val DeltaBlock = 128
   private val PruneBlock = 4096
-
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Dictionary-encoding gain for the low-cardinality string columns:

@@ -46,7 +46,7 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamMaintainOps extends OpGroup {
 
-  /** Staged stream + delta sink, materialized once per (session,
+  /** Staged stream + delta sink, materialized once per (application,
     * dataset): `$p` holds the appended delta files, `$p.stage` the
     * staged CDC JSON, `$p.ckpt` the checkpoint.
     */

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object TrainingDataOps extends OpGroup {
 
-  /** SimHash fingerprint layout, persisted once per (session, dataset):
+  /** SimHash fingerprint layout, persisted once per (application, dataset):
     * one 64-bit simhash per document (graft.functions.TextSim.simhash —
     * 64 signed bit-count aggregates over xxhash64'd tokens). The hash
     * values are Spark-specific, but as persisted parquet they are plain
@@ -41,7 +41,7 @@ object TrainingDataOps extends OpGroup {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
     }
 
-  /** Random-hyperplane LSH layout, persisted once per (session, dataset):
+  /** Random-hyperplane LSH layout, persisted once per (application, dataset):
     * 16 fixed-seed Gaussian hyperplanes (the projection matrix is model
     * metadata, persisted like the PQ codebook), each vector's 16-bit
     * signature = sign bits of its fixed-point dots with the planes.
@@ -93,7 +93,7 @@ object TrainingDataOps extends OpGroup {
   private val PosPoolPerLabel = 8
 
   /** Near-dup cluster labels — connected components over the Jaccard
-    * pair graph — persisted once per (session, dataset) and consumed by
+    * pair graph — persisted once per (application, dataset) and consumed by
     * BOTH cluster-consumer policies (`neardup_connected_components`'s
     * min-id sizing and `neardup_cluster_representative`'s quality
     * argmax). This is the production dedup-graph shape: the iterative CC

@@ -33,15 +33,7 @@ object StreamingOps {
   def fileJsonStream(spark: SparkSession, schema: StructType, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val reader = spark.readStream.schema(schema)
-    // Micro-batch granularity knob for graft.BenchStream (r17, VERDICT
-    // r16 ask #5): `graft.stream.maxFilesPerTrigger` fills in ONLY when
-    // the caller passed None — a caller that pins its batching (T5's
-    // watermark-carrier discipline, T10/T17's ordered CDC replay) is
-    // semantics, never benchmark-tunable.
-    val eff = maxFilesPerTrigger.orElse(
-      spark.conf.getOption("graft.stream.maxFilesPerTrigger")
-        .flatMap(v => scala.util.Try(v.toInt).toOption).filter(_ > 0))
-    eff.foreach(n => reader.option("maxFilesPerTrigger", n))
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.json(dir)
   }
 

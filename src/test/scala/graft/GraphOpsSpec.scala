@@ -46,4 +46,18 @@ class GraphOpsSpec extends SparkSpec {
       assert(small === dist)
     } finally spark.conf.unset("graft.cc.smallThreshold")
   }
+
+  // The loop route stopped by maxIters with labels still changing would
+  // return labels the union-find route never gives, so it must throw.
+  test("the min-label loop throws when maxIters stops it short of the fixpoint") {
+    val n = 6L
+    withConf("graft.cc.smallThreshold", "0") {
+      val e = intercept[IllegalStateException] {
+        graft.functions.GraphOps.connectedComponents(
+          (0L until n).toDF("id"), (0L until n - 1).map(i => (i, i + 1)).toDF("a", "b"),
+          "id", "a", "b", maxIters = 1)
+      }
+      assert(e.getMessage.contains("maxIters=1"))
+    }
+  }
 }

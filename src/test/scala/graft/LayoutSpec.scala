@@ -1,7 +1,7 @@
 package graft
 
 /** The write-once contract every persisted-layout oracle leans on:
-  * one materialization per (session run, dataset) no matter how many
+  * one materialization per (application, dataset) no matter how many
   * queries touch the layout, and `lastPath` always naming the layout
   * the most recent query used (what the dataset-less oracle SQL reads).
   */

@@ -8,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * first touched `Tables`.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkSpec.session()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
@@ -36,4 +30,18 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+}
+
+object SparkSpec {
+
+  /** The suites' session: the running one, or a new application built
+    * the same way when none is running.
+    */
+  def session(): SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .withExtensions(new GraftExtensions)
+    .getOrCreate()
 }
