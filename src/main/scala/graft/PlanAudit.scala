@@ -461,10 +461,9 @@ object PlanAudit {
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // pin the large-N paths so the audit sees cluster-scale plans
-    spark.conf.set("graft.globalrank.smallThreshold", "0")
-    spark.conf.set("graft.pagerank.smallThreshold", "0")
-    spark.conf.set("graft.labelprop.smallThreshold", "0")
+    // every size router takes its large route, so the audit sees
+    // cluster-scale plans
+    spark.conf.set("graft.route.smallRows", "0")
     val results = scala.collection.mutable.LinkedHashMap[String, Seq[String]]()
     var buildFailed = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

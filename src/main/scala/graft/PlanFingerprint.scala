@@ -94,12 +94,10 @@ object PlanFingerprint {
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // pin the large-N paths so fingerprints reflect cluster-scale plans
-    // (same pins as PlanAudit — the two artifacts must describe the
-    // same plans)
-    spark.conf.set("graft.globalrank.smallThreshold", "0")
-    spark.conf.set("graft.pagerank.smallThreshold", "0")
-    spark.conf.set("graft.labelprop.smallThreshold", "0")
+    // every size router takes its large route, so fingerprints reflect
+    // cluster-scale plans (same setting as PlanAudit — the two
+    // artifacts must describe the same plans)
+    spark.conf.set("graft.route.smallRows", "0")
     val rows = scala.collection.mutable.LinkedHashMap[String, (String, Int)]()
     var failed = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -216,9 +214,7 @@ object PlanFingerprint {
         .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
         .getOrCreate()
       s2.sparkContext.setLogLevel("ERROR")
-      s2.conf.set("graft.globalrank.smallThreshold", "0")
-      s2.conf.set("graft.pagerank.smallThreshold", "0")
-      s2.conf.set("graft.labelprop.smallThreshold", "0")
+      s2.conf.set("graft.route.smallRows", "0")
       extraSfs.foreach { case (label, dir) =>
         if (!new java.io.File(dir).isDirectory) {
           System.err.println(s"[planfp] extra sf '$label' dir $dir missing " +

@@ -13,11 +13,12 @@ import org.apache.spark.sql.SparkSession
   * SessionState):
   *
   *   - application scope, shared by every session of one SparkContext:
-  *     layout paths and input fingerprints (`Layout`), footer row counts
-  *     (`Tables.rowCount`), the IVF quantizer, the PQ codebooks and the
-  *     fit sample they share (`SemiStructuredOps`), the bucketed-table
-  *     database (`CurationOps`, whose catalog is the application's) and
-  *     the paged source and sink directories (`SourceOps`);
+  *     layout paths and input fingerprints (`Layout`), parquet footer row
+  *     counts per file (`plans.SizeRoute`), the IVF quantizer, the PQ
+  *     codebooks and the fit sample they share (`SemiStructuredOps`), the
+  *     bucketed-table database (`CurationOps`, whose catalog is the
+  *     application's) and the paged source and sink directories
+  *     (`SourceOps`);
   *   - session scope, per `SparkSession`: analyzed relations (a DataFrame
   *     is bound to the session that analyzed it), the one-split strategy
   *     install and the pin registry (`functions.Checkpoints`).

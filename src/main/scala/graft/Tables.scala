@@ -124,24 +124,10 @@ object Tables {
     * market_basket_affinity's N) this replaces a full extra table scan
     * per query invocation; at 100 TB the cost is one metadata listing +
     * footer read per file, the same work any catalog does at plan time.
-    * Exactness: parquet footers record per-row-group counts written at
-    * commit time; with no filter and no deletes (fixtures are immutable
-    * per round) their sum IS count(*). Memoized per (dir, table) in
-    * [[SessionState]]'s application scope.
+    * It is the size oracle's bound (`graft.plans.SizeRoute`) of the bare
+    * relation, exact: with no filter and no deletes the footers' counts
+    * sum to count(*).
     */
   def rowCount(s: SparkSession, dir: String, name: String): Long =
-    SessionState.application(s)("Tables.rowCount", (dir, name)) {
-      val conf = s.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-      val fs = root.getFileSystem(conf)
-      def files(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
-        else Seq.empty
-      files(fs.getFileStatus(root)).map { f =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-    }
+    graft.plans.SizeRoute.rowBound(apply(s, dir, name)).get.toLong
 }

@@ -28,7 +28,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * long-lived session running many loops that is an unbounded storage
   * accrual. Loops call [[release]] on each superseded snapshot; only
   * the FINAL state (still referenced by the returned plan) is left to
-  * the ContextCleaner.
+  * the ContextCleaner. Whether a corpus-shaped subtree may be pinned at
+  * all is the size oracle's call (`graft.plans.SizeRoute`), at the site.
   */
 object Checkpoints {
 
@@ -89,8 +90,9 @@ object Checkpoints {
   /** [[pin]] a DERIVED plan — one with an Aggregate, Join, Window or
     * Generate — that is not already a pinned `LogicalRDD`; scan-shaped
     * and already-pinned inputs come back untouched. The rule for an
-    * input that a routing count executes and the chosen route then
-    * executes again (GlobalRank's `pinInput`, GraphOps' node count).
+    * input that a routing pass executes and the chosen route then
+    * executes again (GlobalRank's `pinInput`, GraphOps' routing
+    * collect).
     */
   def pinIfDerived(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.{logical => l}
@@ -100,20 +102,5 @@ object Checkpoints {
     }
     val pinned = df.queryExecution.analyzed.isInstanceOf[LogicalRDD]
     if (derived && !pinned) pin(df) else df
-  }
-
-  /** Size-gated [[pin]] for corpus-shaped multi-consumer subtrees:
-    * pins only when a DRIVER-KNOWN row measure (parquet footer count /
-    * an already-collected size — never a new Spark job) is at most
-    * `graft.pin.smallThreshold` (default 4M, the GlobalRank routing
-    * scale). At corpus scale the condition is false and the plan is
-    * untouched — materializing a 100 TB intermediate is the exact
-    * cliff this guard exists to avoid; at fixture/batch scale the pin
-    * stops N-consumer subtrees re-executing per branch.
-    */
-  def pinIfSmall(df: DataFrame, measuredRows: Long): DataFrame = {
-    val threshold = df.sparkSession.conf
-      .get("graft.pin.smallThreshold", "4000000").toLong
-    if (measuredRows <= threshold) pin(df) else df
   }
 }

@@ -32,14 +32,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *      branch — six scans of the source per rank in round 2's plans;
   *   4. global rank = slice offset + local rank.
   *
-  * SIZE-AWARE ROUTING: the span pass also measures the row count. When
-  * the largest group fits comfortably in ONE task (measured count ≤
-  * `graft.globalrank.smallThreshold`, default 4M rows), the plain
-  * window IS the right plan — one job, two stages — and the slice
-  * machinery would be pure overhead. The threshold is a session conf so
-  * tests can pin either path; at cluster scale the measured count routes
-  * large inputs to the sliced plan automatically, like AQE re-planning
-  * on observed statistics.
+  * SIZE-AWARE ROUTING through the size oracle (`graft.plans.SizeRoute`):
+  * when the largest group fits in ONE task, the plain window IS the
+  * right plan — one job, two stages — and the slice machinery would be
+  * pure overhead.
   *
   * Why not `repartitionByRange` + `spark_partition_id`? Range exchanges
   * pick their boundaries by SAMPLING, seeded per physical exchange — and
@@ -67,8 +63,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object GlobalRank {
 
-  private val ThresholdKey = "graft.globalrank.smallThreshold"
-
   /** Eagerly unpersist every still-reachable pin this session made —
     * the sliced paths' snapshots and every [[Checkpoints.pin]]. The
     * registry and its lifetime belong to [[Checkpoints]] (session scope
@@ -78,31 +72,23 @@ object GlobalRank {
   def releaseCheckpoints(spark: org.apache.spark.sql.SparkSession): Int =
     Checkpoints.releasePins(spark)
 
-  /** Routing-pass cost guard (r18 optimization), OPT-IN per call site:
-    * the measuring pass (count, and on the sliced path quantile bounds)
-    * EXECUTES the input plan, and the returned ranking plan executes it
-    * again — so a derived input pays its full compute twice per call.
-    * With `pinInput = true` the rows are pinned ONCE up front (the same
-    * localCheckpoint the sliced path already required for determinism)
-    * and every pass reads the materialized blocks.
-    *
-    * Opt-in, not automatic: measured r18 both ways — pinning wins only
-    * when the input is EXPENSIVE to recompute (spearman's 1.2M-row
-    * rank-count table over a lineitem aggregate, chatterjee's
-    * join-attached ranks), while for the cheap value-domain support
-    * tables the stat family feeds in (tens of thousands of rows off one
-    * events scan) the materialization costs more than the recompute it
-    * saves (page_trend_test 0.29 s → 0.60 s under an always-pin
-    * policy). The caller knows which regime it is in; the default
-    * preserves the pre-r18 plan. Scan-shaped and already-pinned inputs
-    * are never re-pinned.
+  /** Routing-pass cost guard (r18), OPT-IN per call site: a measuring
+    * pass (the count, when the footer bound does not settle the route,
+    * and the sliced path's quantile bounds) EXECUTES the input plan, and
+    * the returned plan executes it again. With `pinInput = true` the rows
+    * are pinned ONCE up front and every pass reads the blocks. Opt-in
+    * because measured r18, pinning wins only for inputs EXPENSIVE to
+    * recompute (spearman's rank-count table, chatterjee's join-attached
+    * ranks); for cheap support tables it costs more than it saves
+    * (page_trend_test 0.29 s → 0.60 s under always-pin). Scan-shaped and
+    * already-pinned inputs are never re-pinned.
     */
   private def pinIfWorthIt(df: DataFrame, pinInput: Boolean): DataFrame =
     if (pinInput) Checkpoints.pinIfDerived(df) else df
 
-  /** Per-group max row count from the cheap routing pass (one tiny row
-    * per group — GlobalRank exists for few-group rankings, so the
-    * collect is bounded by design).
+  /** Per-group max row count from the routing pass (one tiny row per
+    * group — GlobalRank exists for few-group rankings, so the collect is
+    * bounded by design).
     */
   private def measureCounts(df: DataFrame, groupCols: Seq[String]): Long = {
     val statsDf =
@@ -184,7 +170,7 @@ object GlobalRank {
 
   /** Appends a global (or per-`groupCols`) 1-based `row_number` column
     * named `rnCol` (LONG), ordered by `orderCols`. Plans a partition-less
-    * window ONLY when the measured input is small (see object doc).
+    * window ONLY when the input is small (see object doc).
     *
     * `sliceOn` must be numeric and monotone non-decreasing in the
     * `orderCols` ordering; it defaults to the first order column.
@@ -193,13 +179,11 @@ object GlobalRank {
       orderCols: Seq[String], numSlices: Int = 32,
       sliceOn: Option[Column] = None, pinInput: Boolean = false): DataFrame = {
     val spark = df.sparkSession
-    val threshold = spark.conf.get(ThresholdKey, "4000000").toLong
     val base = sliceOn.getOrElse(col(orderCols.head)).cast("double")
     val input = pinIfWorthIt(df, pinInput)
-    val maxCnt = measureCounts(input, groupCols)
 
-    if (maxCnt <= threshold) {
-      // measured-small: every group fits one task — plain window
+    if (graft.plans.SizeRoute.small(df)(measureCounts(input, groupCols))) {
+      // small: every group fits one task — plain window
       val w = (if (groupCols.isEmpty) Window.partitionBy()
                else Window.partitionBy(groupCols.map(col): _*))
         .orderBy(orderCols.map(col): _*)
@@ -270,15 +254,13 @@ object GlobalRank {
       groupCols: Seq[String], orderCols: Seq[String], numSlices: Int = 32,
       sliceOn: Option[Column] = None, pinInput: Boolean = false): DataFrame = {
     val spark = df.sparkSession
-    val threshold = spark.conf.get(ThresholdKey, "4000000").toLong
     val base = sliceOn.getOrElse(col(orderCols.head)).cast("double")
     val input = pinIfWorthIt(df, pinInput)
-    val maxCnt = measureCounts(input, groupCols)
     val vals = sums.indices.map(i => s"__gr_v$i")
     def withValues(d: DataFrame): DataFrame = d.select(col("*") +:
       sums.zip(vals).map { case ((_, v), vn) => v.as(vn) }: _*)
 
-    if (maxCnt <= threshold) {
+    if (graft.plans.SizeRoute.small(df)(measureCounts(input, groupCols))) {
       val w = (if (groupCols.isEmpty) Window.partitionBy()
                else Window.partitionBy(groupCols.map(col): _*))
         .orderBy(orderCols.map(col): _*)
@@ -361,8 +343,8 @@ object GlobalRank {
     * input shuffled twice and the partition-less numbering window
     * executed once per join branch (two single-task sorts of the full
     * input per run, measured r18). The consecutive-pair sum needs no
-    * join at all: measured-small inputs take ONE partition-less lag
-    * window (the rowNumber small-path plan, same routing threshold);
+    * join at all: small inputs take ONE partition-less lag window (the
+    * rowNumber small-path plan, the same size-oracle route);
     * large inputs take the slice machinery — per-slice lag windows in
     * parallel plus a per-slice (first, last) ladder stitched on the
     * driver (numSlices rows), exactly the rowNumber offset discipline.
@@ -374,7 +356,6 @@ object GlobalRank {
       sliceOn: Option[Column] = None, pinInput: Boolean = true,
       knownCount: Option[Long] = None): DataFrame = {
     val spark = df.sparkSession
-    val threshold = spark.conf.get(ThresholdKey, "4000000").toLong
     val base = sliceOn.getOrElse(col(orderCols.head)).cast("double")
     val input = pinIfWorthIt(df, pinInput).withColumn("__gr_v", valueCol)
     // knownCount (r19): a caller that already holds the exact row count
@@ -382,9 +363,7 @@ object GlobalRank {
     // measuring pass — one less execution of the input plan per call.
     // The count routes only; a wrong value could mis-route but never
     // change either route's result (both compute the same sum).
-    val maxCnt = knownCount.getOrElse(measureCounts(input, Nil))
-
-    if (maxCnt <= threshold) {
+    if (graft.plans.SizeRoute.small(df)(knownCount.getOrElse(measureCounts(input, Nil)))) {
       val w = Window.partitionBy().orderBy(orderCols.map(col): _*)
       input
         .withColumn("__gr_d", abs(col("__gr_v") - lag("__gr_v", 1).over(w)))

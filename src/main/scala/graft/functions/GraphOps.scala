@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed connected components by min-label propagation — the
   * equi-join form of large-star/small-star: each round every node takes
@@ -14,19 +15,6 @@ import org.apache.spark.sql.functions._
   * (`localCheckpoint`) so the iterated plan stays flat.
   */
 object GraphOps {
-
-  /** Conf key for the collected-iterate routing threshold (node count).
-    * Mirrors label_propagation's `graft.labelprop.smallThreshold`: a
-    * dedup subgraph that fits the driver comfortably (≤ threshold
-    * nodes ⇒ ≤ 6·threshold undirected edge rows by the kNN/band-cap
-    * construction of every caller) is resolved with one collect + a
-    * union-find instead of O(diameter) join rounds, each of which costs
-    * two driver-scheduled jobs however small the data is (measured r18:
-    * incremental_cc_relabel spent its seconds on ~40 near-empty jobs).
-    * At corpus scale the measured count routes to the distributed
-    * min-label loop unchanged.
-    */
-  private val ThresholdKey = "graft.cc.smallThreshold"
 
   /** Component id (the least member id) per node. `nodes` is one LONG
     * `idCol` per vertex; `edges` holds undirected adjacency as
@@ -41,41 +29,28 @@ object GraphOps {
     * `IllegalStateException`: its labels would not be the component
     * fixpoint and would disagree with the union-find route.
     *
-    * Driver-route guards (r19): every in-repo caller bounds edges at
-    * ≤ 6·|V| rows by the kNN/band-cap construction, but the primitive
-    * no longer trusts that — the collect is capped at 6·threshold + 1
-    * rows via limit(), and an over-cap edge set falls through to the
-    * distributed loop instead of flooding the driver.
+    * A graph whose nodes and edges fit the size oracle
+    * (`graft.plans.SizeRoute`) is resolved with one collect + a
+    * union-find instead of O(diameter) join rounds of two near-empty
+    * jobs each (measured r18: incremental_cc_relabel spent its seconds
+    * on ~40 of them).
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       idCol: String, srcCol: String, dstCol: String,
       maxIters: Int = 20): DataFrame = {
     val spark = nodes.sparkSession
-    val threshold = spark.conf.get(ThresholdKey, "100000").toLong
-    // Pin a DERIVED nodes plan before measuring (r19, VERDICT r18 #8):
-    // the routing count EXECUTES the nodes plan, and whichever route
-    // wins executes it again (collect, or the loop's initial
-    // checkpoint) — the same pin-first-then-measure discipline
-    // GlobalRank uses. Scan-shaped and already-pinned inputs keep
-    // their plans untouched, so in-repo callers see zero plan change.
+    // Pin a DERIVED nodes plan before routing (r19): a routing collect
+    // executes it, and the distributed loop executes it again.
+    // Scan-shaped and already-pinned inputs are left untouched.
     val nodesOnly = Checkpoints.pinIfDerived(nodes.select(col(idCol)))
-    val nNodes = nodesOnly.count()
-    val edgeCap = 6L * threshold
-    val smallEdges: Option[Array[Row]] =
-      if (nNodes > threshold) None
-      else {
-        // limit() bounds the driver transfer even if a caller breaks
-        // the ≤6·|V| convention; cap+1 rows distinguish "fits" from
-        // "over cap" without a separate count job
-        val probe = edges.select(col(srcCol), col(dstCol))
-          .limit(math.min(edgeCap + 1, Int.MaxValue.toLong).toInt).collect()
-        if (probe.length <= edgeCap) Some(probe) else None
-      }
-    if (nNodes <= threshold && smallEdges.isDefined) {
+    val collected = graft.plans.SizeRoute.collectIfSmall(nodesOnly,
+      edges.select(col(srcCol), col(dstCol)))
+    if (collected.isDefined) {
       // collected iterate: union-find with min-id roots — the same
       // component-MINIMUM fixpoint as the join loop, bit-for-bit
-      val ns = nodesOnly.collect().map(_.getLong(0))
-      val es = smallEdges.get.map(r => (r.getLong(0), r.getLong(1)))
+      val Seq(nRows, eRows) = collected.get
+      val ns = nRows.map(_.getLong(0))
+      val es = eRows.map(r => (r.getLong(0), r.getLong(1)))
       val parent = scala.collection.mutable.HashMap[Long, Long]()
       ns.foreach(n => parent(n) = n)
       def find(x: Long): Long = {
@@ -94,14 +69,9 @@ object GraphOps {
           }
         }
       }
-      val rows: java.util.List[Row] = java.util.Arrays.asList(
-        ns.sorted.map(n => Row(n, find(n))): _*)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(idCol,
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("component",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      return spark.createDataFrame(rows, schema)
+      val rows = java.util.Arrays.asList(ns.sorted.map(n => Row(n, find(n))): _*)
+      return spark.createDataFrame(rows,
+        StructType(Seq(StructField(idCol, LongType), StructField("component", LongType))))
     }
     val pairs = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
     val und = pairs.unionByName(

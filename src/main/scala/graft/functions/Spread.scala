@@ -26,12 +26,23 @@ import org.apache.spark.sql.{Column, DataFrame}
   * projection): Catalyst keeps a projection where it stands, so a
   * repartition above a heavy `withColumn` would still evaluate the
   * heavy expression inside the scan task.
+  *
+  * Precondition: the input is scan-shaped. `df.rdd` would run the stages
+  * below an exchange eagerly, so an input whose plan holds one is refused
+  * with an `IllegalArgumentException` before anything runs.
   */
 object Spread {
   def apply(df: DataFrame, keys: Column*): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.{logical => l}
+    val exchange = df.queryExecution.optimizedPlan.collectFirst {
+      case p @ (_: l.Aggregate | _: l.Join | _: l.Window |
+          _: l.RepartitionByExpression | _: l.RebalancePartitions) => p.nodeName
+      case p: l.Sort if p.global => p.nodeName
+      case p: l.Repartition if p.shuffle => p.nodeName
+    }
+    require(exchange.isEmpty, s"Spread needs a scan-shaped input, but its " +
+      s"plan has a ${exchange.get}, which would run stages eagerly")
     val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    // .rdd is planning-only here: Spread is applied to scan-shaped
-    // inputs (no exchange below, so no AQE stage execution is forced)
     if (df.rdd.getNumPartitions >= n) df
     else df.repartition(n, keys: _*)
   }

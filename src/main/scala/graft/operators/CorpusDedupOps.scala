@@ -248,9 +248,8 @@ object CorpusDedupOps extends OpGroup {
       // Spread (r19): the fixture corpus is one read split, so the
       // word explode + per-word md5 — the query's dominant CPU —
       // serialized on one core; identity at corpus scale
-      val words = graft.functions.Spread(
-          Tables.documents(s, d).select("doc_id", "source", "text"),
-          col("doc_id"))
+      val docs = Tables.documents(s, d).select("doc_id", "source", "text")
+      val words = graft.functions.Spread(docs, col("doc_id"))
         .select(col("doc_id"), col("source"),
           posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
         .withColumn("mdint",
@@ -260,16 +259,21 @@ object CorpusDedupOps extends OpGroup {
         sum("b").over(Window.partitionBy("doc_id").orderBy("pos"))
           - col("b"))
       // size-gated pin (r19): the chunk table feeds both the
-      // multiplicity census and the final join — unpinned, the
-      // explode + window + aggregate pipeline ran once per branch
-      val chunks = graft.functions.Checkpoints.pinIfSmall(chunked
+      // multiplicity census and the final join — unpinned, the explode +
+      // window + aggregate pipeline ran once per branch. The explode
+      // hides the chunk count from the size oracle's bound, so it routes
+      // on the corpus rows; at corpus scale the plan stays unpinned.
+      val chunkTable = chunked
         .groupBy("doc_id", "source", "chunk_no")
         .agg(count(lit(1)).as("n_words"), min("pos").as("min_pos"),
           sum(col("mdint").cast("decimal(38,0)")).as("smd"),
           sum(expr("CAST(mdint AS DECIMAL(38,0)) * (pos + 1)")).as("smdp"))
         .withColumn("fkey",
-          expr("smdp - CAST(min_pos AS DECIMAL(38,0)) * smd")),
-        Tables.rowCount(s, d, "documents"))
+          expr("smdp - CAST(min_pos AS DECIMAL(38,0)) * smd"))
+      val chunks =
+        if (graft.plans.SizeRoute.small(docs)(docs.count()))
+          graft.functions.Checkpoints.pin(chunkTable)
+        else chunkTable
       val mult = chunks.groupBy("n_words", "fkey")
         .agg(count(lit(1)).as("m"))
       chunks.join(mult, Seq("n_words", "fkey"))

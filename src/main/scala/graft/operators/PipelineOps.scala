@@ -8,7 +8,7 @@ import graft.streaming.StreamingOps
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** End-to-end pipeline + side-effecting sink/stream operators declared as
@@ -56,49 +56,46 @@ object PipelineOps extends OpGroup {
   private def freshDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  /** Runs `body` with `spark.sql.shuffle.partitions` pinned to `n`,
-    * restoring the caller's value after. A stateful stream materializes
-    * ONE state-store instance (directory, snapshot/maintenance files,
-    * provider) per shuffle partition at first start — for a bounded
-    * AvailableNow demo stream, 32 instances are pure fixed overhead.
-    * At cluster scale the same knob is sized to the stream's real key
-    * cardinality, not to the batch session default.
+  /** Waits for a bounded stream to drain, then deletes its `spent`
+    * directories — staging and checkpoint, which nothing reads once the
+    * stream has ended. The sink stays: the returned DataFrame reads it
+    * lazily.
     */
-  /** Stateful-stream sizing rule: shuffle.partitions at the FIRST run
-    * of a stateful query fixes its state-store-instance count (it is
-    * baked into the checkpoint), and every micro-batch pays store
-    * open/commit once per instance — so the demos pin a small count to
-    * keep the fixture floor honest, and a 100× deployment raises the
-    * SAME knob (stores scale with partitions; the plan is unchanged).
-    * StreamingSpec pins numShufflePartitions == the session conf.
-    */
-  private def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
+  private def drain(q: StreamingQuery, spent: String*): Unit =
+    try q.awaitTermination()
+    finally spent.foreach(p => FileUtils.deleteDirectory(new File(p)))
 
-  /** Runs `body` with the post-data no-data micro-batch disabled,
-    * restoring the caller's value after (r19). A bounded AvailableNow
-    * demo stream pays one extra trigger after the last data batch
-    * whose only job is watermark-driven state EVICTION — for the keys
-    * below the sink rows are already final when it fires (inner join
+  /** Runs `body`, a bounded stateful demo stream, with one shuffle
+    * partition and no post-data no-data micro-batch, restoring the
+    * caller's values after.
+    *
+    * Shuffle.partitions at the FIRST run of a stateful query fixes its
+    * state-store-instance count (it is baked into the checkpoint), and
+    * every micro-batch pays store open/commit once per instance — so the
+    * demos pin a small count to keep the fixture floor honest, and a
+    * 100× deployment raises the SAME knob (stores scale with partitions;
+    * the plan is unchanged). StreamingSpec pins numShufflePartitions ==
+    * the session conf.
+    *
+    * The no-data batch (r19) is one extra trigger after the last data
+    * batch whose only job is watermark-driven state EVICTION — for these
+    * keys the sink rows are already final when it fires (inner join
     * emits eagerly; dedup emits per data batch; the late-drop windows
     * closed by the final watermark were already emitted by the last
-    * DATA batch, whose watermark the carrier-file design advanced),
-    * so skipping it drops a whole trigger's fixed cost without moving
-    * a row. Correctness is value-exact-oracle-checked per key, at
-    * every SF. At production scale a CONTINUOUS stream keeps the
-    * default: eviction timeliness matters when the query never ends.
+    * DATA batch, whose watermark the carrier-file design advanced), so
+    * skipping it drops a whole trigger's fixed cost without moving a
+    * row. Correctness is value-exact-oracle-checked per key, at every
+    * SF. At production scale a CONTINUOUS stream keeps the default:
+    * eviction timeliness matters when the query never ends.
     */
-  private def withoutNoDataBatches[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try body finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None => s.conf.unset(key)
+  private def boundedStateful[A](s: SparkSession)(body: => A): A = {
+    val confs = Seq("spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(p)) => s.conf.set(k, p)
+      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -160,10 +157,7 @@ object PipelineOps extends OpGroup {
         .writeStream.format("parquet").option("path", sink)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
-      // staging and checkpoint are spent once the stream has drained; the
-      // sink stays, as the returned DataFrame reads it lazily
-      try q.awaitTermination()
-      finally Seq(stage, ckpt).foreach(p => FileUtils.deleteDirectory(new File(p)))
+      drain(q, stage, ckpt)
       // the stream's schema is known: inferring it would run a job
       s.read.schema(schema).parquet(sink)
         .select("event_id", "ts_us", "event_type", "value")
@@ -188,14 +182,14 @@ object PipelineOps extends OpGroup {
           StructType.fromDDL("event_id LONG, ts_us LONG, event_type STRING"),
           stage)
         .withColumn("ts", expr("timestamp_micros(ts_us)"))
-      withShufflePartitions(s, 1) { withoutNoDataBatches(s) {
+      boundedStateful(s) {
         val q = StreamingOps.dedupWithinWatermark(stream, "7 days")
           .select("event_id", "event_type")
           .writeStream.format("parquet").option("path", sink)
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } }
+        drain(q, stage, ckpt)
+      }
       s.read.parquet(sink).orderBy("event_id")
     }),
 
@@ -226,7 +220,7 @@ object PipelineOps extends OpGroup {
           "cents LONG")
       val stream = StreamingOps.fileJsonStream(s, schema, stage,
         maxFilesPerTrigger = Some(1))
-      withShufflePartitions(s, 1) { withoutNoDataBatches(s) {
+      boundedStateful(s) {
         val q = stream.writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
@@ -237,8 +231,8 @@ object PipelineOps extends OpGroup {
           }
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } }
+        drain(q, stage, ckpt)
+      }
       val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
         .orderBy(col("ts_us").desc, col("event_id").desc)
       s.read.parquet(target)
@@ -307,13 +301,13 @@ object PipelineOps extends OpGroup {
           StructType.fromDDL("event_id LONG, ts_us LONG, event_type STRING, value DOUBLE"),
           stage, maxFilesPerTrigger = Some(1))
         .withColumn("ts", expr("timestamp_micros(ts_us)"))
-      withShufflePartitions(s, 1) { withoutNoDataBatches(s) {
+      boundedStateful(s) {
         val q = StreamingOps.tumblingCounts(stream, "10 minutes", "30 minutes")
           .writeStream.format("parquet").option("path", sink)
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } }
+        drain(q, stage, ckpt)
+      }
       s.read.parquet(sink).orderBy("w_start", "event_type")
     }),
 
@@ -343,7 +337,7 @@ object PipelineOps extends OpGroup {
             expr("timestamp_micros(ts_us)").as(s"${pre}_ts"),
             col("user_id").as(s"${pre}_user"))
           .withWatermark(s"${pre}_ts", "2 hours")
-      withShufflePartitions(s, 1) { withoutNoDataBatches(s) {
+      boundedStateful(s) {
         val q = side(stageC, "click").join(side(stageP, "purch"),
             expr("""click_user = purch_user AND
                    |click_ts BETWEEN purch_ts - INTERVAL 6 HOUR
@@ -354,8 +348,8 @@ object PipelineOps extends OpGroup {
           .writeStream.format("parquet").option("path", sink)
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } }
+        drain(q, stageC, stageP, ckpt)
+      }
       s.read.parquet(sink).orderBy("click_id", "purch_id")
     }),
 
@@ -384,7 +378,7 @@ object PipelineOps extends OpGroup {
         .writeStream.format("parquet").option("path", sink)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      drain(q, stage, ckpt)
       s.read.parquet(sink)
         .select("event_id", "user_id", "event_type", "c_mktsegment")
         .orderBy("event_id")

@@ -60,16 +60,6 @@ object RankingOps extends OpGroup {
   private val PrScale = 1000000000000L
   private val PrIters = 8
 
-  /** Vocabulary-size routing threshold (session conf, the GlobalRank
-    * smallThreshold pattern): at or below it the aggregated graph is
-    * collected and iterated driver-side (measured ~20 tiny jobs of pure
-    * scheduler latency saved); above it the SAME int64 recurrence runs
-    * as a distributed equi-join loop — addition is commutative and
-    * every division floors, so the two paths are bit-identical
-    * (RankingSpec pins it at threshold 0).
-    */
-  private val PrThresholdKey = "graft.pagerank.smallThreshold"
-
   /** BM25 lexical top-10 candidates (doc_id, score_fp) — the shared
     * first stage of the pure-lexical exhibit and the hybrid rerank.
     * Filter-before-aggregate keeps the shuffle at |terms|×docs; df and
@@ -198,8 +188,8 @@ object RankingOps extends OpGroup {
     // shuffle each; the iterate runs on the aggregated graph (nodes =
     // event vocabulary), one equi-join + sum per round, all int64
     // fixed-point so the result is bit-identical to the DuckDB unrolled
-    // replay. Node count is a driver scalar (tiny aggregate) used to
-    // seed the uniform prior — the GlobalRank measured-pass pattern.
+    // replay. Node count is a driver scalar used to seed the uniform
+    // prior.
     "pagerank_event_transitions" -> ((s, d) => {
       val ev = Tables.events(s, d)
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
@@ -208,22 +198,13 @@ object RankingOps extends OpGroup {
         .filter(col("prev").isNotNull)
         .groupBy(col("prev").as("src"), col("event_type").as("dst"))
         .agg(count(lit(1)).as("w"))
-      // The aggregated graph is VOCABULARY-sized model state (|V| event
-      // types, |E| ≤ |V|² observed transitions). SIZE-AWARE ROUTING
-      // (the GlobalRank pattern): a vocabulary within the threshold is
-      // collected and iterated driver-side, the documented
-      // offline-model pattern (PQ codebooks, IVF centroids) — a
-      // DataFrame join-loop costs ~20 tiny jobs (measured 1.4-2.2 s of
-      // pure scheduler latency for 5 nodes). Beyond the threshold the
-      // SAME recurrence iterates as a distributed equi-join loop (one
-      // edges⋈ranks join + per-node sum per round, lineage truncated
-      // per round). Both recurrences are exact int64 with floored
-      // divisions and commutative addition, so they are bit-identical
-      // on any partitioning — RankingSpec asserts it at threshold 0.
+      // The graph (|V| event types, |E| ≤ |V|²) is collected and iterated
+      // driver-side within the size oracle (graft.plans.SizeRoute) — a
+      // join loop costs ~20 tiny jobs (1.4-2.2 s for 5 nodes) — and as a
+      // distributed equi-join loop beyond it. Both are exact int64 with
+      // floored divisions, so they are bit-identical (RankingSpec).
       val nodes = ev.select(col("event_type")).distinct()
-      val threshold = s.conf.get(PrThresholdKey, "10000").toLong
-      val nNodes = nodes.count()
-      val base = PrScale / nNodes
+      val collected = graft.plans.SizeRoute.collectIfSmall(trans, nodes)
 
       // Per-edge contribution floor(r·w/ow) is computed DIVIDE-FIRST:
       //   (r DIV ow)·w + ((r MOD ow)·w) DIV ow
@@ -236,15 +217,17 @@ object RankingOps extends OpGroup {
       // out of ONE node before that wraps). All three evaluations —
       // driver loop, distributed expr, DuckDB replay — use the same
       // form, so the recurrence stays bit-identical everywhere.
-      if (nNodes <= threshold) {
+      if (collected.isDefined) {
         // ONE collect of the counted edges; out-weights fold from it (a
         // second lazy reference would re-run the window pipeline for
         // the self-join's build side).
-        val edges = trans.collect()
+        val Seq(edgeRows, nodeRows) = collected.get
+        val edges = edgeRows
           .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
         val ow = edges.groupBy(_._1).map { case (src, es) => src -> es.map(_._3).sum }
         val eRows = edges.map { case (src, dst, w) => (src, dst, w, ow(src)) }
-        val nodeList = nodes.collect().map(_.getString(0)).sorted
+        val nodeList = nodeRows.map(_.getString(0)).sorted
+        val base = PrScale / nodeList.length
         var ranks = nodeList.map(_ -> base).toMap
         for (_ <- 1 to PrIters) {
           val inflow = new scala.collection.mutable.HashMap[String, Long]()
@@ -266,6 +249,7 @@ object RankingOps extends OpGroup {
         // round snapshots are released eagerly (Checkpoints) — only the
         // final ranks, still read by the returned plan, is left to the
         // ContextCleaner.
+        val base = PrScale / nodes.count()
         val e = trans
           .join(trans.groupBy("src").agg(sum("w").as("ow")), "src")
           .select("src", "dst", "w", "ow").localCheckpoint()

@@ -536,13 +536,12 @@ object SemiStructuredOps extends OpGroup {
     // (out-edges; weight = 4 − rank, an exact integer derived from the
     // bit-proven cosine ranking), synchronous rounds, seeds clamped.
     // Ties break (weight DESC, label ASC) — a total order, so every
-    // round is deterministic on any partitioning. SIZE-AWARE ROUTING
-    // (the PageRank recipe): node counts within the threshold iterate
-    // driver-side on the collected vocabulary-sized graph; beyond it
-    // the SAME recurrence runs as an edges⋈labels equi-join loop
-    // (weighted-vote variant of the GraphOps CC machinery), superseded
-    // round snapshots released eagerly. AnnSpec pins bit-equality of
-    // the two paths at threshold 0. Oracle: the [[LpIters]]-stage
+    // round is deterministic on any partitioning. A graph within the
+    // size oracle (graft.plans.SizeRoute) iterates driver-side on the
+    // collected rows; beyond it the SAME recurrence runs as an
+    // edges⋈labels equi-join loop, superseded round snapshots released
+    // eagerly. AnnSpec pins bit-equality of the two paths with the limit
+    // at 0. Oracle: the [[LpIters]]-stage
     // unrolled CTE replay (the PageRank recipe) over edges re-derived
     // from the persisted layout.
     "label_propagation_knn" -> ((s, d) => {
@@ -555,20 +554,20 @@ object SemiStructuredOps extends OpGroup {
         .localCheckpoint()
       val nodes = s.read.parquet(ivfLayout(s, d))
         .select(col("vec_id").as("node"))
-      val threshold = s.conf.get(LpThresholdKey, "10000").toLong
-      val nNodes = nodes.count()
+      val collected = graft.plans.SizeRoute.collectIfSmall(edges, seeds, nodes)
 
-      if (nNodes <= threshold) {
+      if (collected.isDefined) {
         // collected iterate: the kNN graph of an offline-model-sized
         // corpus slice (the PQ-codebook scale argument)
-        val e = edges.collect().map(r =>
+        val Seq(edgeRows, seedRows, nodeRows) = collected.get
+        val e = edgeRows.map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2)))
         // the collect above was the snapshot's last reader — release its
         // blocks eagerly (the distributed branch's discipline; ADVICE r7)
         graft.functions.Checkpoints.release(edges)
-        val seedMap = seeds.collect()
+        val seedMap = seedRows
           .map(r => r.getLong(0) -> r.getInt(1)).toMap
-        val nodeList = nodes.collect().map(_.getLong(0)).sorted
+        val nodeList = nodeRows.map(_.getLong(0)).sorted
         var lab: Map[Long, Option[Int]] =
           nodeList.map(n => n -> seedMap.get(n)).toMap
         for (_ <- 1 to LpIters) {
@@ -645,19 +644,13 @@ object SemiStructuredOps extends OpGroup {
       graft.functions.Checkpoints.release(knn)
       val nodes = s.read.parquet(ivfLayout(s, d))
         .select(col("vec_id").as("node"))
-      // size-aware routing (r18, the GraphOps.connectedComponents
-      // discipline): each synchronous peel round costs two
-      // driver-scheduled jobs however small the pinned edge set is —
-      // KcoreIters rounds were ~1.2 s of near-empty jobs at bench
-      // scale. A measured-small edge set (≤ graft.kcore.smallThreshold
-      // rows; the kNN construction bounds it by 6·|V|) peels on the
-      // driver — bit-for-bit the same synchronous-round fixpoint — and
-      // returns local (node, deg0) / core-membership relations. At
-      // corpus scale the count routes to the distributed loop
-      // unchanged.
-      val smallMax = s.conf.get("graft.kcore.smallThreshold", "1000000").toLong
-      val (deg0Df, aliveDf) = if (und.count() <= smallMax) {
-        val es = und.select("src", "dst").collect()
+      // An edge set within the size oracle (graft.plans.SizeRoute) peels
+      // on the driver — bit-for-bit the same synchronous-round fixpoint;
+      // each distributed peel round costs two near-empty jobs (KcoreIters
+      // rounds were ~1.2 s at bench scale).
+      val collected = graft.plans.SizeRoute.collectIfSmall(und.select("src", "dst"))
+      val (deg0Df, aliveDf) = if (collected.isDefined) {
+        val es = collected.get.head
           .map(r => (r.getLong(0), r.getLong(1)))
         val deg0M = es.groupBy(_._1).map { case (k, v) => (k, v.length.toLong) }
         var aliveSet = es.map(_._1).toSet
@@ -781,13 +774,10 @@ object SemiStructuredOps extends OpGroup {
     */
   private val SemDedupTau = 0.4
 
-  /** Label-propagation knobs: synchronous rounds (cells are small-
-    * diameter, 3 rounds saturate any cell containing a seed) and the
-    * size-aware routing threshold (the PageRank pattern — a session
-    * conf so AnnSpec can pin both paths bit-identical).
+  /** Label-propagation synchronous rounds: cells are small-diameter, so
+    * 3 rounds saturate any cell containing a seed.
     */
   private val LpIters = 3
-  private val LpThresholdKey = "graft.labelprop.smallThreshold"
 
   /** k-core knobs: core order (degree ≥ 2 in the symmetrized kNN graph)
     * and synchronous peel rounds. 4 rounds reach the true 2-core on the

@@ -283,9 +283,7 @@ class AnnSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getBoolean(1),
         if (r.isNullAt(2)) None else Some(r.getInt(2))))
     val driver = runLp()
-    spark.conf.set("graft.labelprop.smallThreshold", "0")
-    val dist = try runLp()
-      finally spark.conf.unset("graft.labelprop.smallThreshold")
+    val dist = withConf("graft.route.smallRows", "0")(runLp())
     assert(driver.toSeq === dist.toSeq,
       "the two routing paths must agree bit-for-bit")
     val seedTruth = Tables.embeddings(spark, sf())
@@ -350,17 +348,17 @@ class AnnSpec extends SparkSpec {
     assert(rows.count(_.getBoolean(2)) > 0, "fixture keeps a non-empty core")
   }
 
-  // r18: the collected driver peel (measured-small) and the distributed
-  // join loop must agree bit-for-bit — threshold 0 forces the loop.
+  // r18: the collected driver peel (small route) and the distributed
+  // join loop must agree bit-for-bit — the size oracle's limit at 0
+  // forces the loop.
   test("kcore collected peel equals the distributed loop") {
     val small = SparkEntry.queries("kcore_graph_prune")(spark, sf())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    spark.conf.set("graft.kcore.smallThreshold", "0")
-    try {
+    withConf("graft.route.smallRows", "0") {
       val dist = SparkEntry.queries("kcore_graph_prune")(spark, sf())
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
       assert(small.toSeq === dist.toSeq)
-    } finally spark.conf.unset("graft.kcore.smallThreshold")
+    }
   }
 
   test("ann_recall_eval agrees with the declared exact/IVF top-3 queries") {

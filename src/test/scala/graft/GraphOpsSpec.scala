@@ -32,26 +32,26 @@ class GraphOpsSpec extends SparkSpec {
     assert(cc(Seq(5L, 6L), Seq((6L, 5L))) === Map(5L -> 5L, 6L -> 5L))
   }
 
-  // r18: the collected union-find route (measured-small) and the
-  // distributed min-label loop must agree bit-for-bit — threshold 0
-  // forces the join loop, the default routes these sizes to the driver.
+  // r18: the collected union-find route (small route) and the
+  // distributed min-label loop must agree bit-for-bit — the size
+  // oracle's limit at 0 forces the join loop, the default routes these
+  // sizes to the driver.
   test("collected union-find equals the distributed min-label loop") {
     val nodes = Seq(1L, 2L, 3L, 4L, 7L, 10L, 11L, 12L, 99L)
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 7L),
       (10L, 11L), (11L, 12L), (12L, 10L), (42L, 1L) /* dangling src */)
     val small = cc(nodes, edges)
-    spark.conf.set("graft.cc.smallThreshold", "0")
-    try {
+    withConf("graft.route.smallRows", "0") {
       val dist = cc(nodes, edges)
       assert(small === dist)
-    } finally spark.conf.unset("graft.cc.smallThreshold")
+    }
   }
 
   // The loop route stopped by maxIters with labels still changing would
   // return labels the union-find route never gives, so it must throw.
   test("the min-label loop throws when maxIters stops it short of the fixpoint") {
     val n = 6L
-    withConf("graft.cc.smallThreshold", "0") {
+    withConf("graft.route.smallRows", "0") {
       val e = intercept[IllegalStateException] {
         graft.functions.GraphOps.connectedComponents(
           (0L until n).toDF("id"), (0L until n - 1).map(i => (i, i + 1)).toDF("a", "b"),

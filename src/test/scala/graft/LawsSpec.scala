@@ -22,6 +22,19 @@ object LawsSpec extends Properties("GraftLaws") {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Runs `body` with every size router at its large route when `large`
+    * (the size oracle's limit at 0), restoring the previous limit after.
+    */
+  private def routed[T](large: Boolean)(body: => T): T =
+    if (!large) body
+    else {
+      val key = "graft.route.smallRows"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "0")
+      try body
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+
   private val idsGen: Gen[List[Long]] =
     Gen.nonEmptyListOf(Gen.chooseNum(0L, 200L))
 
@@ -98,14 +111,15 @@ object LawsSpec extends Properties("GraftLaws") {
     forAll(Gen.nonEmptyListOf(Gen.zip(Gen.chooseNum(0, 2), Gen.chooseNum(-50L, 50L))),
       Gen.chooseNum(1, 5)) { (rows, slices) =>
       import spark.implicits._
-      // threshold 0 ⇒ always the sliced path: the slice machinery is the
+      // limit 0 ⇒ always the sliced path: the slice machinery is the
       // law under test (the fast path IS the reference single-task window)
-      spark.conf.set("graft.globalrank.smallThreshold", "0")
       val df = rows.toDF("g", "v")
-      val got = graft.functions.GlobalRank
-        .rowNumber(df, "rn", Seq("g"), Seq("v"), numSlices = slices)
-        .select("g", "rn", "v").as[(Int, Long, Long)].collect()
-        .map { case (g, rn, v) => (g, rn) -> v }.toMap
+      val got = routed(large = true) {
+        graft.functions.GlobalRank
+          .rowNumber(df, "rn", Seq("g"), Seq("v"), numSlices = slices)
+          .select("g", "rn", "v").as[(Int, Long, Long)].collect()
+          .map { case (g, rn, v) => (g, rn) -> v }.toMap
+      }
       val want = rows.groupBy(_._1).flatMap { case (g, vs) =>
         vs.map(_._2).sorted.zipWithIndex.map { case (v, i) => (g, i + 1L) -> v }
       }
@@ -122,11 +136,12 @@ object LawsSpec extends Properties("GraftLaws") {
       1 -> Gen.chooseNum(1000L, 1000000L))), // far outliers
       Gen.chooseNum(2, 6)) { (vs, slices) =>
       import spark.implicits._
-      spark.conf.set("graft.globalrank.smallThreshold", "0")
       val df = vs.toDF("v")
-      val got = graft.functions.GlobalRank
-        .rowNumber(df, "rn", Nil, Seq("v"), numSlices = slices)
-        .select("rn", "v").as[(Long, Long)].collect().toMap
+      val got = routed(large = true) {
+        graft.functions.GlobalRank
+          .rowNumber(df, "rn", Nil, Seq("v"), numSlices = slices)
+          .select("rn", "v").as[(Long, Long)].collect().toMap
+      }
       val want = vs.sorted.zipWithIndex
         .map { case (v, i) => (i + 1L) -> v }.toMap
       got == want
@@ -138,12 +153,13 @@ object LawsSpec extends Properties("GraftLaws") {
     forAll(Gen.nonEmptyListOf(Gen.chooseNum(-100L, 100L)), Gen.chooseNum(1, 5)) {
       (vs, slices) =>
       import spark.implicits._
-      spark.conf.set("graft.globalrank.smallThreshold", "0")
       val rows = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       val df = rows.toDF("k", "v")
-      val got = graft.functions.GlobalRank
-        .prefixSum(df, "cum", col("v"), Nil, Seq("k"), numSlices = slices)
-        .select("k", "cum").as[(Long, Long)].collect().toMap
+      val got = routed(large = true) {
+        graft.functions.GlobalRank
+          .prefixSum(df, "cum", col("v"), Nil, Seq("k"), numSlices = slices)
+          .select("k", "cum").as[(Long, Long)].collect().toMap
+      }
       val want = rows.sortBy(_._1).scanLeft((-1L, 0L)) {
         case ((_, acc), (k, v)) => (k, acc + v)
       }.drop(1).toMap
@@ -160,10 +176,7 @@ object LawsSpec extends Properties("GraftLaws") {
       Gen.chooseNum(-100L, 100L))), Gen.chooseNum(2, 6),
       Gen.oneOf(true, false)) { (rows, slices, forceSliced) =>
       import spark.implicits._
-      if (forceSliced)
-        spark.conf.set("graft.globalrank.smallThreshold", "0")
-      else spark.conf.unset("graft.globalrank.smallThreshold")
-      try {
+      routed(large = forceSliced) {
         val keyed = rows.zipWithIndex.map { case ((o, v), i) =>
           (o, i.toLong, v) }
         val df = keyed.toDF("o", "k", "v")
@@ -182,7 +195,7 @@ object LawsSpec extends Properties("GraftLaws") {
         val want = sorted.zip(sorted.drop(1))
           .map { case (a, b) => math.abs(b - a) }.sum
         got == want && gotKnown == want
-      } finally spark.conf.unset("graft.globalrank.smallThreshold")
+      }
     }
 
   // GlobalRank r18: the multi-column prefixSums equals the chained
@@ -193,10 +206,7 @@ object LawsSpec extends Properties("GraftLaws") {
       Gen.chooseNum(-50L, 50L))), Gen.chooseNum(2, 5),
       Gen.oneOf(true, false)) { (rows, slices, forceSliced) =>
       import spark.implicits._
-      if (forceSliced)
-        spark.conf.set("graft.globalrank.smallThreshold", "0")
-      else spark.conf.unset("graft.globalrank.smallThreshold")
-      try {
+      routed(large = forceSliced) {
         val keyed = rows.zipWithIndex.map { case ((a, b), i) =>
           (i.toLong, a, b) }
         val df = keyed.toDF("k", "a", "b")
@@ -216,7 +226,7 @@ object LawsSpec extends Properties("GraftLaws") {
             .collect().map(r => r._1 -> (r._2, r._3)).toMap
         }
         got == chained
-      } finally spark.conf.unset("graft.globalrank.smallThreshold")
+      }
     }
 
   // GlobalRank: every value binds to the INPUT on both routes. The
@@ -226,10 +236,7 @@ object LawsSpec extends Properties("GraftLaws") {
     forAll(Gen.nonEmptyListOf(Gen.chooseNum(-50L, 50L)), Gen.chooseNum(2, 5),
       Gen.oneOf(true, false)) { (vs, slices, forceSliced) =>
       import spark.implicits._
-      if (forceSliced)
-        spark.conf.set("graft.globalrank.smallThreshold", "0")
-      else spark.conf.unset("graft.globalrank.smallThreshold")
-      try {
+      routed(large = forceSliced) {
         val df = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
           .toDF("k", "a")
         val got = graft.functions.GlobalRank
@@ -239,7 +246,7 @@ object LawsSpec extends Properties("GraftLaws") {
         val want = vs.scanLeft(0L)(_ + _).drop(1)
         got.sortBy(_._1).toSeq == want.zipWithIndex.map { case (c, i) =>
           (i.toLong, c, c) }
-      } finally spark.conf.unset("graft.globalrank.smallThreshold")
+      }
     }
 
   // S2/S3/F4: from_json ∘ to_json is identity under the declared artist

@@ -71,11 +71,10 @@ class PlanSpec extends SparkSpec {
 
   test("no declared ranking query plans a partition-less (single-task) window on the large-N path") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
-    // GlobalRank routes measured-small inputs through a plain window (the
-    // right plan when the whole group fits one task); pin the threshold to
-    // 0 so the plan under test is the one a 100 TB input would get.
-    spark.conf.set("graft.globalrank.smallThreshold", "0")
-    try {
+    // GlobalRank routes small inputs through a plain window (the right
+    // plan when the whole group fits one task); the size oracle's limit
+    // at 0 makes the plan under test the one a 100 TB input would get.
+    withConf("graft.route.smallRows", "0") {
       for (q <- Seq("paginated_source", "batch_chunks", "ntile_percentile",
           "percentile_disc", "minwise_sample_per_group", "token_budget_packing")) {
         val df = SparkEntry.queries(q)(spark, sf())
@@ -92,7 +91,7 @@ class PlanSpec extends SparkSpec {
         }
         assert(badPhys.isEmpty, s"$q executes a single-partition WindowExec")
       }
-    } finally spark.conf.unset("graft.globalrank.smallThreshold")
+    }
   }
 
   test("explode family plans exactly ONE exchange (range partitioning serves groupBy AND sort)") {
@@ -185,11 +184,14 @@ class PlanSpec extends SparkSpec {
     def ranks(): Array[(Long, Long)] = graft.functions.GlobalRank
       .rowNumber(df, "rn", Nil, Seq("p_partkey"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    spark.conf.set("graft.globalrank.smallThreshold", "0")
-    val sliced = try ranks() finally
-      spark.conf.unset("graft.globalrank.smallThreshold")
+    val sliced = withConf("graft.route.smallRows", "0")(ranks())
     assert(ranks() sameElements sliced,
       "fast-path ranks diverge from the sliced two-phase ranks")
+    // the pinned chunk table (small route) and the unpinned plan
+    def cdc(): Seq[org.apache.spark.sql.Row] =
+      SparkEntry.queries("cdc_chunk_stats")(spark, sf()).collect().toSeq
+    assert(cdc() === withConf("graft.route.smallRows", "0")(cdc()),
+      "cdc_chunk_stats differs between its pinned and unpinned routes")
   }
 
   test("GlobalRank checkpoint storage: pinned while plans are live, reclaimed by release") {
@@ -203,15 +205,14 @@ class PlanSpec extends SparkSpec {
     // drain snapshots from any earlier sliced call in this suite
     graft.functions.GlobalRank.releaseCheckpoints(spark)
     val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
-    spark.conf.set("graft.globalrank.smallThreshold", "0")
-    val plans = try {
+    val plans = withConf("graft.route.smallRows", "0") {
       (1 to 3).map { _ =>
         val p = graft.functions.GlobalRank
           .rowNumber(df, "rn", Nil, Seq("p_partkey"))
         p.count()
         p // strong reference held for the duration of the assertions
       }
-    } finally spark.conf.unset("graft.globalrank.smallThreshold")
+    }
     val pinned = spark.sparkContext.getPersistentRDDs.keySet -- beforeIds
     assert(pinned.size >= 3,
       "each sliced ranking pins one checkpoint snapshot while its plan is live")
@@ -671,5 +672,16 @@ class PlanSpec extends SparkSpec {
         s"query construction launched ${jobs.get()} Spark job(s) — the " +
           "measured scalars must come from footer stats, not a scan")
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("Spread refuses an input whose plan has an exchange, before any job runs") {
+    val docs = Tables.documents(spark, sf())
+    val agg = docs.groupBy("source").count()
+    val (e, jobs) = jobsIn(intercept[IllegalArgumentException](
+      graft.functions.Spread(agg, col("source"))))
+    assert(e.getMessage.contains("Aggregate"))
+    assert(jobs.isEmpty, s"Spread started jobs on a refused input: $jobs")
+    // a scan-shaped input is spread as before
+    graft.functions.Spread(docs.select("doc_id", "text"), col("doc_id"))
   }
 }

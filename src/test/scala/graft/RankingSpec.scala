@@ -72,15 +72,15 @@ class RankingSpec extends SparkSpec {
   }
 
   test("pagerank distributed join-loop is bit-identical to the driver iterate") {
-    // threshold 0 forces the GraphOps-style equi-join loop (the
+    // limit 0 forces the GraphOps-style equi-join loop (the
     // beyond-driver-memory vocabulary path); default routes the 5-type
     // fixture driver-side. Same int64 recurrence ⇒ same bits.
     val driver = run("pagerank_event_transitions")
       .map(r => (r.getString(0), r.getLong(1))).toSeq
-    spark.conf.set("graft.pagerank.smallThreshold", "0")
-    val dist = try run("pagerank_event_transitions")
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    finally spark.conf.unset("graft.pagerank.smallThreshold")
+    val dist = withConf("graft.route.smallRows", "0") {
+      run("pagerank_event_transitions")
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+    }
     assert(dist === driver, "distributed iterate diverged from driver iterate")
   }
 

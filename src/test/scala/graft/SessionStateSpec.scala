@@ -1,47 +1,10 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 /** `SessionState` owns the lifetime of every memo: relations per session,
   * layouts and fitted models per application, all dropped at application
   * end.
   */
 class SessionStateSpec extends SparkSpec {
-
-  /** The result of `body` and the number of Spark jobs it started. A
-    * marker job in the same job group runs last: the listener bus is
-    * ordered, so once the marker's start arrives every earlier start has.
-    */
-  private def jobsIn[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"session-state-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).filter(p => group == p.getProperty("spark.jobGroup.id"))
-          .foreach { p =>
-            if (p.getProperty("spark.job.description") == "marker") markerSeen.countDown()
-            else jobs.incrementAndGet()
-          }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "body", interruptOnCancel = false)
-      val out =
-        try {
-          val r = body
-          sc.setJobDescription("marker")
-          spark.range(1).collect()
-          r
-        } finally sc.clearJobGroup()
-      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "marker job never reached the listener")
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("sessions of one application get their own relations and share one layout write") {
     val d = sf()
@@ -68,10 +31,10 @@ class SessionStateSpec extends SparkSpec {
     spark.read.parquet(s"${sf()}/embeddings.parquet")
       .write.parquet(s"$d/embeddings.parquet")
     val (_, firstFit) = jobsIn(operators.SemiStructuredOps.frozenQuantizer(spark, d))
-    assert(firstFit >= 1, "the first fit collects the sample")
+    assert(firstFit.size >= 1, "the first fit collects the sample")
     val ivf = operators.SemiStructuredOps.ivfLayout(spark, d)
     val (_, secondFit) = jobsIn(operators.SemiStructuredOps.frozenPqCodebook(spark, d))
-    assert(secondFit === 0, "the PQ fit collected the fit sample again")
+    assert(secondFit.size === 0, "the PQ fit collected the fit sample again")
     val pq = operators.SemiStructuredOps.pqLayoutPathForSpec(spark, d)
     assert(spark.read.parquet(ivf).count() === spark.read.parquet(pq).count())
   }

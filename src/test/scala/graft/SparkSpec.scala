@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,6 +32,51 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The result of `body` and, per Spark job it started in start order,
+    * the short call site of the action behind it ("count at
+    * Foo.scala:12"; jobs outside a SQL execution give their stage name).
+    * A marker job in the same job group runs last: the listener bus is
+    * ordered, so once the marker's start arrives every earlier start has.
+    */
+  def jobsIn[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-in-${System.nanoTime()}"
+    val actions = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          actions.put(s.executionId.toString, s.description)
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).filter(p => group == p.getProperty("spark.jobGroup.id"))
+          .foreach { p =>
+            if (p.getProperty("spark.job.description") == "marker") markerSeen.countDown()
+            else sites.add(Option(p.getProperty("spark.sql.execution.id"))
+              .flatMap(id => Option(actions.get(id)))
+              .getOrElse(j.stageInfos.headOption.fold("")(_.name)))
+          }
+    }
+    sc.addSparkListener(listener)
+    try {
+      // the group alone, with no description: a SQL execution then
+      // takes its action's call site as its description
+      sc.setLocalProperty("spark.jobGroup.id", group)
+      val out =
+        try {
+          val r = body
+          sc.setJobDescription("marker")
+          spark.range(1).collect()
+          r
+        } finally sc.clearJobGroup()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "marker job never reached the listener")
+      (out, sites.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

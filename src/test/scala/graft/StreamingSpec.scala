@@ -525,4 +525,15 @@ class StreamingSpec extends SparkSpec {
     assert(after.count() == before)
     assert(after.count() == after.select("doc_id").distinct().count())
   }
+
+  test("a stream key deletes its staging and checkpoint directories once drained") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def spent(): Set[String] = Option(tmp.list()).getOrElse(Array.empty[String])
+      .filter(_.matches("graft_t\\d+_(stage|ckpt).*")).toSet
+    val before = spent()
+    val df = SparkEntry.queries("stream_static_enrich")(spark, sf())
+    assert(spent() -- before === Set.empty[String])
+    // the sink stays: the returned DataFrame still reads it
+    assert(df.count() === df.select("event_id").distinct().count())
+  }
 }
