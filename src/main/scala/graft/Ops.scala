@@ -1,8 +1,9 @@
 package graft
 
+import graft.functions.ExactSum
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.graftx.GraftSqlBridge
 
 /** One group of declared operators (SURVEY.md §2 rows). `queries` keys and
   * `oracleSql` keys must match; oracle entries are omitted for rows marked ✗
@@ -21,11 +22,19 @@ trait OpGroup {
   * addition is associative, so partial (map-side) aggregation over any
   * partitioning of 100 TB yields bit-identical results to DuckDB's
   * single-node sum.
+  *
+  * [[dsum]], [[davg]] and [[decSum]] compute exactly
+  * `sum(CAST(x AS DECIMAL(18,6)))`, the SQL their `…Sql` twins give
+  * DuckDB, through [[graft.functions.ExactSum]]: a DOUBLE input runs the
+  * codegen'd fixed-point kernel ([[graft.functions.Fixed6]], a two-long
+  * sum buffer) instead of a `BigDecimal` per row, with the same result,
+  * NULL-on-empty and overflow behavior; any other input keeps Spark's
+  * `Cast` and `Sum`.
   */
 object Det {
   /** Order-insensitive money/measure sum: Σ decimal(18,6) → double, 6dp. */
   def dsum(c: Column): Column =
-    round(sum(c.cast(DecimalType(18, 6))).cast("double"), 6)
+    round(exactSum(c).cast("double"), 6)
 
   /** Matching DuckDB SQL for [[dsum]]. */
   def dsumSql(e: String): String =
@@ -33,7 +42,7 @@ object Det {
 
   /** Order-insensitive average: exact decimal sum, IEEE double division. */
   def davg(c: Column): Column =
-    round(sum(c.cast(DecimalType(18, 6))).cast("double") / count(c), 6)
+    round(exactSum(c).cast("double") / count(c), 6)
 
   /** Matching DuckDB SQL for [[davg]]. */
   def davgSql(e: String): String =
@@ -42,7 +51,11 @@ object Det {
   /** Exact decimal sum kept as decimal — for deterministic ORDER BY / rank
     * comparisons on aggregated measures (fp sums can reorder ties).
     */
-  def decSum(c: Column): Column = sum(c.cast(DecimalType(18, 6)))
+  def decSum(c: Column): Column = exactSum(c)
+
+  /** `sum(CAST(c AS DECIMAL(18,6)))`: DECIMAL(28,6). */
+  private def exactSum(c: Column): Column =
+    GraftSqlBridge.column(ExactSum(GraftSqlBridge.expression(c)).toAggregateExpression())
 
   def decSumSql(e: String): String = s"sum(CAST(($e) AS DECIMAL(18,6)))"
 

@@ -13,7 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   *
   *   Σ_i floor(double(a_i) · double(b_i) · 10^15)  : LONG
   *
-  * Why this exists (SURVEY.md §4's one sanctioned performance extension):
+  * Why this exists (SURVEY.md §4's sanctioned performance extension,
+  * the first of the engine's two; the second is [[Fixed6]], the
+  * exact-sum kernel):
   * the portable formulation — `aggregate(zip_with(...))` over DECIMAL —
   * is a higher-order function, which Catalyst evaluates interpreted
   * (CodegenFallback) with a BigDecimal allocation per element; profiled

@@ -6,7 +6,6 @@ import graft.{Det, OpGroup, Tables}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Surface-widening operators beyond the SURVEY §2 inventory: extra
   * staging formats (CSV/ORC — a reference user switching engines brings
@@ -338,9 +337,8 @@ object ExtendedOps extends OpGroup {
       Tables.lineitem(s, d)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast(DecimalType(18, 6))).as("sx"),
-          sum((col("l_quantity") * col("l_quantity")).cast(DecimalType(18, 6)))
-            .as("sxx"))
+          decSum(col("l_quantity")).as("sx"),
+          decSum(col("l_quantity") * col("l_quantity")).as("sxx"))
         .select(col("l_returnflag"), col("n"),
           round(col("sx").cast("double") / col("n"), 6).as("mean_qty"),
           round(sqrt((col("n") * col("sxx").cast("double")

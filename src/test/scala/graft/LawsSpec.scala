@@ -1,9 +1,15 @@
 package graft
 
+import graft.functions.{Fixed6, Fixed6Sum}
 import graft.schemas.Spotify
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
@@ -306,5 +312,168 @@ object LawsSpec extends Properties("GraftLaws") {
           Spotify.artists).as("s"))
         .select("s.*")
       rt.exceptAll(parsed).isEmpty && parsed.exceptAll(rt).isEmpty
+    }
+
+  // Exact sums: the fixed-point kernel behind Det.dsum/davg/decSum is
+  // Spark's CAST(d AS DECIMAL(18,6)) bit for bit, NULLs and ANSI errors
+  // included, interpreted and codegen'd.
+  private val anyDouble: Gen[Double] = Gen.oneOf(
+    Gen.choose(-1e13, 1e13),
+    for { m <- Gen.choose(-1.0, 1.0); e <- Gen.choose(-12, 13) } yield m * math.pow(10, e),
+    Gen.choose(Long.MinValue, Long.MaxValue).map(java.lang.Double.longBitsToDouble))
+
+  private val priceLike: Gen[Double] = Gen.oneOf(
+    Gen.choose(-10000000L, 10000000L).map(_ / 100.0),
+    for { c <- Gen.choose(90000L, 10500000L); q <- Gen.choose(1, 50) } yield c / 100.0 * q,
+    for { c <- Gen.choose(90000L, 10500000L); dp <- Gen.choose(0, 10) }
+      yield c / 100.0 * (1.0 - dp / 100.0))
+
+  /** Doubles within 4 ulps of (k + 0.5)·10⁻⁶, for |k| up to 10¹⁷. */
+  private val nearHalf: Gen[Seq[Double]] = for {
+    e <- Gen.choose(0, 17)
+    m <- Gen.choose(-1.0, 1.0)
+  } yield {
+    val t = (math.floor(m * math.pow(10, e)) + 0.5) * 1e-6
+    val ups = Iterator.iterate(t)(Math.nextUp).slice(1, 5).toSeq
+    val downs = Iterator.iterate(t)(Math.nextDown).slice(1, 5).toSeq
+    downs.reverse ++ (t +: ups)
+  }
+
+  // a negative half-point where d·10⁶ ≥ 2⁵² rounds to an integer, so the
+  // fraction is the product's error alone (−0.5 here) until normalized
+  private val negativeTie = -7437798982.8075905
+
+  private val specials: Seq[Double] = Seq(0.0, -0.0, Double.NaN,
+    Double.PositiveInfinity, Double.NegativeInfinity, Double.MinPositiveValue,
+    -Double.MinPositiveValue, Double.MaxValue, -Double.MaxValue, 1e11, -1e11,
+    999999999999.9999, -999999999999.9999, 1e12, -1e12, 1e15, -1e17, 4.5e15) ++
+    Iterator.iterate(negativeTie)(Math.nextUp).take(5) ++
+    Iterator.iterate(negativeTie)(Math.nextDown).slice(1, 5)
+
+  private def outcome(f: => Option[Long]): Either[String, Option[Long]] =
+    try Right(f) catch { case e: SparkThrowable => Left(e.getCondition) }
+
+  /** Every double's kernel outcome equals the cast's, interpreted and
+    * codegen'd, under both eval modes.
+    */
+  private def kernelIsCast(ds: Seq[Double]): Boolean =
+    Seq(EvalMode.ANSI, EvalMode.LEGACY).forall { mode =>
+      val in = BoundReference(0, DoubleType, nullable = false)
+      val kernel = Fixed6(in, mode)
+      val cast = Cast(in, Fixed6.CastType, None, mode)
+      def generated(e: Expression) = GenerateUnsafeProjection.generate(Seq(e))
+      val (genKernel, genCast) = (generated(kernel), generated(cast))
+      ds.forall { d =>
+        val row = InternalRow(d)
+        val want = outcome(Option(cast.eval(row)).map(_.asInstanceOf[
+          org.apache.spark.sql.types.Decimal].toUnscaledLong))
+        val wantGen = outcome(Some(genCast(row)).filterNot(_.isNullAt(0))
+          .map(_.getDecimal(0, 18, 6).toUnscaledLong))
+        val got = outcome(Option(kernel.eval(row)).map(_.asInstanceOf[Long]))
+        val gotGen = outcome(Some(genKernel(row)).filterNot(_.isNullAt(0)).map(_.getLong(0)))
+        val ok = want == wantGen && got == want && gotGen == want
+        if (!ok) println(s"fixed6 != cast for $d ($mode): $got / $gotGen vs $want")
+        ok
+      }
+    }
+
+  property("fixed6 kernel equals CAST to DECIMAL(18,6) on random doubles") =
+    forAll(Gen.listOfN(300, anyDouble))(kernelIsCast)
+
+  property("fixed6 kernel equals CAST within 4 ulps of every half-point") =
+    forAll(Gen.listOfN(20, nearHalf))(ts => kernelIsCast(ts.flatten))
+
+  property("fixed6 kernel equals CAST on zeros, NaN, infinities and overflow") =
+    org.scalacheck.Prop(kernelIsCast(specials))
+
+  property("fixed6 kernel decides every price-like double without the cast") =
+    forAll(Gen.listOfN(300, priceLike)) { ds =>
+      kernelIsCast(ds) && ds.forall(Fixed6.unscaled(_) != Fixed6.Undecided)
+    }
+
+  // Det's exact sums equal the built-in spelling they replace, at 1 and 7
+  // shuffle partitions and over 1 KB file splits, grouped, global and
+  // empty, for a DOUBLE input (the kernel) and a LONG one (Spark's sum).
+  property("dsum/davg/decSum equal sum(CAST AS DECIMAL(18,6)) at any partitioning") =
+    forAll(Gen.nonEmptyListOf(Gen.zip(Gen.choose(0, 3),
+      Gen.option(Gen.oneOf(priceLike, Gen.choose(-1e11, 1e11),
+        nearHalf.map(_.head))), Gen.choose(-1000000L, 1000000L)))) { rows =>
+      import spark.implicits._
+      val dir = java.nio.file.Files.createTempDirectory("graft_law_exact").toString
+      try {
+        rows.toDF("g", "x", "n").repartition(3).write.mode("overwrite").parquet(dir)
+        def dec(c: String) = sum(col(c).cast(Fixed6.CastType))
+        def pairs = Seq(
+          Det.dsum(col("x")) -> round(dec("x").cast("double"), 6),
+          Det.davg(col("x")) -> round(dec("x").cast("double") / count(col("x")), 6),
+          Det.decSum(col("x")) -> dec("x"),
+          Det.decSum(col("n")) -> dec("n"),
+          Det.dsum(col("n")) -> round(dec("n").cast("double"), 6))
+        def agg(t: org.apache.spark.sql.DataFrame): Seq[Row] = {
+          val cols = pairs.flatMap { case (a, b) => Seq(a, b) }
+          t.agg(cols.head, cols.tail: _*).collect().toSeq
+        }
+        def results: Seq[Seq[Row]] = {
+          val t = spark.read.parquet(dir)
+          val grouped = t.groupBy("g").agg(count(lit(1)).as("rows"),
+            pairs.flatMap { case (a, b) => Seq(a, b) }: _*).orderBy("g")
+          Seq(grouped.collect().toSeq.map(r => Row(r.toSeq.drop(2): _*)),
+            agg(t), agg(t.filter(col("g") > 3)))
+        }
+        def withConfs[T](kv: (String, String)*)(body: => T): T = {
+          val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+          kv.foreach { case (k, v) => spark.conf.set(k, v) }
+          try body
+          finally prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+        }
+        val legs = Seq(
+          withConfs("spark.sql.shuffle.partitions" -> "1")(results),
+          withConfs("spark.sql.shuffle.partitions" -> "7")(results),
+          withConfs("spark.sql.files.maxPartitionBytes" -> "1k")(results))
+        // unaliased, each keeps the built-in form's column name and type
+        val t = spark.read.parquet(dir)
+        val sameSchema = t.select(pairs.map(_._1): _*).schema ==
+          t.select(pairs.map(_._2): _*).schema
+        val sameAsOld = legs.flatten.flatten.forall { r =>
+          r.toSeq.grouped(2).forall { case Seq(a, b) => a == b }
+        }
+        val empty = legs.forall(_(2).head.toSeq.forall(_ == null))
+        sameSchema && sameAsOld && empty && legs.distinct.size == 1
+      } finally {
+        val f = new java.io.File(dir)
+        Option(f.listFiles()).foreach(_.foreach(_.delete())); f.delete()
+      }
+    }
+
+  // the two-long buffer sums exactly through updates (NULLs skipped) and
+  // a merge, and keeps 0 <= lo < 2^32, so neither word grows with the
+  // row count
+  property("fixed6_sum buffer sums exactly and carries its low word") =
+    forAll(Gen.listOf(Gen.option(Gen.choose(-999999999999999999L, 999999999999999999L))),
+      Gen.choose(0, 20)) { (us, cut) =>
+      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BindReferences}
+      val u = AttributeReference("u", org.apache.spark.sql.types.LongType)()
+      val agg = Fixed6Sum(u, EvalMode.ANSI)
+      val buf = agg.aggBufferAttributes
+      val update = BindReferences.bindReferences(agg.updateExpressions, buf :+ u)
+      val merge = BindReferences.bindReferences(agg.mergeExpressions,
+        buf ++ agg.inputAggBufferAttributes)
+      val eval = BindReferences.bindReference(agg.evaluateExpression, buf)
+      val init = agg.initialValues.map(_.eval())
+      def fold(part: Seq[Option[Long]]) = part.scanLeft(init) { (b, v) =>
+        update.map(_.eval(InternalRow.fromSeq(b :+ v.orNull)))
+      }
+      val (a, b) = us.splitAt(math.min(cut, us.size))
+      val states = fold(a) ++ fold(b)
+      val merged = merge.map(_.eval(InternalRow.fromSeq(fold(a).last ++ fold(b).last)))
+      val lowOk = (states :+ merged).forall { st =>
+        val lo = st(1).asInstanceOf[Long]; lo >= 0 && lo < (1L << 32)
+      }
+      val got = Option(eval.eval(InternalRow.fromSeq(merged)))
+        .map(_.asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal)
+      val want = Option.when(us.exists(_.isDefined))(new java.math.BigDecimal(
+        us.flatten.map(java.math.BigInteger.valueOf)
+          .foldLeft(java.math.BigInteger.ZERO)(_ add _), 6))
+      lowOk && got.map(_.stripTrailingZeros) == want.map(_.stripTrailingZeros)
     }
 }

@@ -458,6 +458,29 @@ class PlanSpec extends SparkSpec {
     assert(e.queryExecution.executedPlan.toString.contains("*(1) Project"))
   }
 
+  test("exact sums run the fixed-point kernel: no DOUBLE->DECIMAL cast, no DECIMAL sum buffer") {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    val aqe = new AdaptiveSparkPlanHelper {}
+    for (q <- Seq("group_hash_agg", "star_join_3way")) {
+      val df = SparkEntry.queries(q)(spark, sf())
+      df.collect() // the final adaptive plan
+      val nodes = aqe.collect(df.queryExecution.executedPlan) { case p => p }
+      val casts = nodes.flatMap(_.expressions.flatMap(_.collect {
+        case c: Cast if c.child.dataType == DoubleType &&
+          c.dataType.isInstanceOf[DecimalType] => c
+      }))
+      val buffers = nodes.collect { case a: BaseAggregateExec =>
+        a.aggregateExpressions.flatMap(_.aggregateFunction.aggBufferAttributes)
+      }.flatten
+      assert(casts.isEmpty, s"$q casts doubles to decimal: ${casts.mkString(", ")}")
+      assert(buffers.nonEmpty && !buffers.exists(_.dataType.isInstanceOf[DecimalType]),
+        s"$q keeps a decimal aggregation buffer: ${buffers.mkString(", ")}")
+    }
+  }
+
   test("pq_encode and pq_adc run inside WholeStageCodegen (no fallback)") {
     val ne = Tables.embeddings(spark, sf()).limit(50)
       .select(expr("transform(embedding, x -> CAST(x AS FLOAT))").as("ne"))

@@ -3,13 +3,14 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session fixture: one local session per suite (lazy), built
   * with `GraftExtensions` so planner shape never depends on which suite
   * first touched `Tables`.
   */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
@@ -30,8 +31,18 @@ trait SparkSpec extends AnyFunSuite {
   def multiSplit[T](body: => T): T =
     withConf("spark.sql.files.maxPartitionBytes", "1k")(body)
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A new directory under `java.io.tmpdir`, deleted after the suite. */
+  def tmpDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tmpDirs.add(dir)
+    dir.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tmpDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
+    finally super.afterAll()
 
   /** The result of `body` and, per Spark job it started in start order,
     * the short call site of the action behind it ("count at
