@@ -10,17 +10,19 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * {{{ spark.sql.extensions=graft.GraftExtensions }}}
   *
-  * and every session on the cluster (including SQL-only users who never
-  * touch the Scala API) gets `fixed_dot` resolved by the analyzer, with
-  * codegen, no runtime `register()` call needed, and two planner
-  * strategies: the AS-OF JOIN operator's and the one-split file scan
-  * fast path (`graft.plans.OneSplitScanStrategy`). This is the deployment
-  * story for the 1000-executor cluster: extensions ship in the jar and
-  * are active from the first query, instead of depending on each
-  * notebook calling a registration helper.
+  * and every session on the cluster gets `fixed_dot` resolved by the
+  * analyzer for SQL text, with codegen, and two planner strategies: the
+  * AS-OF JOIN operator's and the one-split file scan fast path
+  * (`graft.plans.OneSplitScanStrategy`). This is the deployment story
+  * for the 1000-executor cluster: extensions ship in the jar and are
+  * active from the first query.
   *
-  * `VectorFunctions.register` remains as the per-session fallback for
-  * environments that can't set cluster conf; each strategy has one too.
+  * The DataFrame API needs none of it for expressions: every custom
+  * expression has a Column constructor (`VectorFunctions.fixedDot`,
+  * `AnnPq.encode`, ...) that builds the Catalyst node directly, so no
+  * build path reads or writes the session's function registry. Each
+  * strategy has a per-session install for environments that can't set
+  * cluster conf.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{GetArrayItem, Literal}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,8 +21,9 @@ import org.apache.spark.sql.functions._
   * so the centroids — and every cell — are a function of the data
   * alone, identical at any partition count or file-split size.
   *
-  * Scale shape: cell assignment is a map-side projection (`ivf_cell`,
-  * PQ's compiled nearest-centroid kernel); the probe is an equi-join on
+  * Scale shape: cell assignment is a map-side projection (element 0 of
+  * a one-subspace [[AnnPq.encode]] over the centroids passed in, PQ's
+  * compiled nearest-centroid kernel); the probe is an equi-join on
   * the cell id (cells are shuffle keys, candidate lists stay bounded);
   * the centroid table is `k` rows of model metadata broadcast to rank
   * probe cells — never a per-row driver lookup.
@@ -37,19 +37,12 @@ object AnnIvf {
   /** `emb` (vec_id, embedding, ...) + INT `cell`: the index of the
     * centroid nearest to each unit-normalized vector.
     */
-  def assign(s: SparkSession, emb: DataFrame,
-      cents: Array[Array[Double]]): DataFrame = {
-    VectorFunctions.register(s)
-    // a one-subspace PqEncode, registered under a name of its own so
-    // the session's `pq_encode` keeps its PQ codebook
-    s.sessionState.functionRegistry.createOrReplaceTempFunction("ivf_cell",
-      exprs => GetArrayItem(PqEncode(exprs.head, Array(cents)), Literal(0)),
-      "built-in")
+  def assign(emb: DataFrame, cents: Array[Array[Double]]): DataFrame =
     emb.withColumn("__n", VectorFunctions.norm("embedding"))
-      .withColumn("cell", call_function("ivf_cell",
-        VectorFunctions.unitNormalized("embedding", "__n")))
+      .withColumn("cell", AnnPq.encode(
+        VectorFunctions.unitNormalized("embedding", "__n"), Array(cents))
+        .getItem(0))
       .drop("__n")
-  }
 
   /** Top-`topK` cosine neighbors for every vector matching `queryPred`,
     * scoring only the `nprobe` nearest cells per query. Output:
@@ -57,7 +50,7 @@ object AnnIvf {
     */
   def topk(s: SparkSession, emb: DataFrame, cents: Array[Array[Double]],
       queryPred: Column, topK: Int, nprobe: Int): DataFrame =
-    topkAssigned(s, assign(s, emb, cents), cents, queryPred, topK, nprobe)
+    topkAssigned(s, assign(emb, cents), cents, queryPred, topK, nprobe)
 
   /** Same search over an ALREADY cell-assigned table — the serving path:
     * cells were assigned at write time (e.g. a parquet layout
@@ -69,7 +62,6 @@ object AnnIvf {
       cents: Array[Array[Double]], queryPred: Column, topK: Int,
       nprobe: Int): DataFrame = {
     import s.implicits._
-    VectorFunctions.register(s)
     val assigned = assigned0
       .select(col("vec_id"), col("embedding"), col("cell"),
         VectorFunctions.norm("embedding").as("norm"))

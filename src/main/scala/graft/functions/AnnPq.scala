@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{col, md5}
+import org.apache.spark.sql.graftx.GraftSqlBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
 
 /** Product quantization (PQ) for embedding search — the memory side of
@@ -20,11 +21,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
   *
   * Scale shape: codebooks are model metadata (m × k × d/m doubles —
   * ~8 KB here) fitted OFFLINE on a bounded deterministic sample and
-  * broadcast inside the encode/score expressions; encoding and scoring
-  * are pure map-side projections (whole-stage codegen calls a compiled
-  * helper — no interpreted HOF tree in the hot path); top-k is the same
-  * per-query window as every other ANN path. Compose with the IVF cell
-  * layout for probe pruning; this file demonstrates the pure PQ scan.
+  * carried inside the encode/score expressions — [[encode]], [[adc]]
+  * and [[reconErr]] take the codebook as an argument, so a plan scores
+  * with the model its caller passed, never with a session-wide name;
+  * encoding and scoring are pure map-side projections (whole-stage
+  * codegen calls a compiled helper — no interpreted HOF tree in the hot
+  * path); top-k is the same per-query window as every other ANN path.
+  * Compose with the IVF cell layout for probe pruning; this file
+  * demonstrates the pure PQ scan.
   *
   * Codebook fitting is Lloyd's algorithm run driver-side on the
   * collected [[fitSample]] — deterministic by construction (md5-ordered
@@ -50,14 +54,12 @@ object AnnPq {
     * partitioning (TakeOrderedAndProject: each partition ships only its
     * local top-N keys).
     */
-  def fitSample(emb: DataFrame): Array[Array[Float]] = {
-    VectorFunctions.register(emb.sparkSession)
+  def fitSample(emb: DataFrame): Array[Array[Float]] =
     emb.withColumn("__n", VectorFunctions.norm("embedding"))
       .select(md5(col("vec_id").cast("string")).as("h"),
         VectorFunctions.unitNormalized("embedding", "__n").as("ne"))
       .orderBy("h").limit(FIT_SAMPLE).collect()
       .map(_.getSeq[Float](1).toArray)
-  }
 
   /** Deterministic per-subspace codebooks: Array(m)(k)(subDim). */
   def fitCodebooks(sample: Array[Array[Float]], m: Int, k: Int,
@@ -153,7 +155,7 @@ object AnnPq {
     * per-subspace ≤ sub·4e12 ≈ 3.2e13 — int64 by 5 orders; corpus
     * sums lift to DECIMAL(38,0) downstream.
     */
-  def reconErr(ne: ArrayData, codes: ArrayData,
+  def reconErrVec(ne: ArrayData, codes: ArrayData,
       cb: Array[Array[Array[Double]]]): ArrayData = {
     val m = cb.length
     val sub = cb(0)(0).length
@@ -174,20 +176,21 @@ object AnnPq {
     new GenericArrayData(out)
   }
 
-  /** Register `pq_encode(emb)` / `pq_adc(q, codes)` /
-    * `pq_recon_err(ne, codes)` bound to `cb` in the session registry
-    * (idempotent per codebook — re-registering swaps the captured
-    * model, the house pattern for model-carrying expressions).
+  /** `pq_encode(ne)`: the m codes of each normalized vector under `cb`. */
+  def encode(ne: Column, cb: Array[Array[Array[Double]]]): Column =
+    GraftSqlBridge.column(PqEncode(GraftSqlBridge.expression(ne), cb))
+
+  /** `pq_adc(q, codes)`: the fixed-point ADC score ([[adcDot]]) under `cb`. */
+  def adc(q: Column, codes: Column, cb: Array[Array[Array[Double]]]): Column =
+    GraftSqlBridge.column(PqAdcScore(GraftSqlBridge.expression(q),
+      GraftSqlBridge.expression(codes), cb))
+
+  /** `pq_recon_err(ne, codes)`: the per-subspace errors ([[reconErrVec]])
+    * under `cb`.
     */
-  def register(spark: SparkSession, cb: Array[Array[Array[Double]]]): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode", exprs => PqEncode(exprs.head, cb), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_adc", exprs => PqAdcScore(exprs.head, exprs(1), cb), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_recon_err", exprs => PqReconError(exprs.head, exprs(1), cb),
-      "built-in")
-  }
+  def reconErr(ne: Column, codes: Column, cb: Array[Array[Array[Double]]]): Column =
+    GraftSqlBridge.column(PqReconError(GraftSqlBridge.expression(ne),
+      GraftSqlBridge.expression(codes), cb))
 }
 
 /** array<float> (normalized) → array<int> PQ codes. Codegen emits one
@@ -241,7 +244,7 @@ case class PqAdcScore(left: Expression, right: Expression,
 }
 
 /** (array<float> exact vector, array<int> codes) → per-subspace
-  * fixed-point reconstruction errors (length m), see [[AnnPq.reconErr]].
+  * fixed-point reconstruction errors (length m), see [[AnnPq.reconErrVec]].
   */
 case class PqReconError(left: Expression, right: Expression,
     cb: Array[Array[Array[Double]]])
@@ -256,11 +259,11 @@ case class PqReconError(left: Expression, right: Expression,
   override def prettyName: String = "pq_recon_err"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullSafeEval(ne: Any, codes: Any): Any =
-    AnnPq.reconErr(ne.asInstanceOf[ArrayData], codes.asInstanceOf[ArrayData], cb)
+    AnnPq.reconErrVec(ne.asInstanceOf[ArrayData], codes.asInstanceOf[ArrayData], cb)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cbRef = ctx.addReferenceObj("pqcb", cb, "double[][][]")
     nullSafeCodeGen(ctx, ev, (ne, c) =>
-      s"${ev.value} = graft.functions.AnnPq.reconErr($ne, $c, $cbRef);")
+      s"${ev.value} = graft.functions.AnnPq.reconErrVec($ne, $c, $cbRef);")
   }
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqReconError =

@@ -1,15 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.XxHash64
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.graftx.GraftSqlBridge
 
 /** Bloom-filter membership pre-filter (SURVEY §2.L surface; the C4
   * scale pattern): expose Spark's OWN runtime-filter machinery —
   * `BloomFilterAggregate` (a commutative OR-merge monoid: partial
   * per-mapper bitsets union across any partitioning) and
-  * `BloomFilterMightContain` (codegen'd probe) — as registry functions,
+  * `BloomFilterMightContain` (codegen'd probe) — as DataFrame columns,
   * keyed by xxhash64 exactly like `InjectRuntimeFilter` does.
   *
   * Why: at 100 TB the exact hash join of a daily batch against a
@@ -30,16 +30,18 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   * CorpusDedupSpec, not the oracle.
   */
 object BloomDedup {
-  /** Register `bloom_agg(key, estimatedItems, numBits)` and
-    * `bloom_might_contain(bf, key)` (idempotent).
+  /** The aggregate bitset of xxhash64(`key`) over a group, sized for
+    * `items` keys in `bits` bits.
     */
-  def register(spark: SparkSession): Unit = {
-    val fr = spark.sessionState.functionRegistry
-    fr.createOrReplaceTempFunction("bloom_agg", exprs =>
-      new BloomFilterAggregate(new XxHash64(Seq(exprs.head)),
-        exprs(1), exprs(2)).toAggregateExpression(), "built-in")
-    fr.createOrReplaceTempFunction("bloom_might_contain", exprs =>
-      BloomFilterMightContain(exprs.head, new XxHash64(Seq(exprs(1)))),
-      "built-in")
-  }
+  def agg(key: Column, items: Long, bits: Long): Column =
+    GraftSqlBridge.column(new BloomFilterAggregate(
+      new XxHash64(Seq(GraftSqlBridge.expression(key))),
+      Literal(items), Literal(bits)).toAggregateExpression())
+
+  /** Whether `key` may be in the bitset `bf` (a literal or a scalar
+    * subquery, e.g. `Dataset.scalar()` over an [[agg]]).
+    */
+  def mightContain(bf: Column, key: Column): Column =
+    GraftSqlBridge.column(BloomFilterMightContain(GraftSqlBridge.expression(bf),
+      new XxHash64(Seq(GraftSqlBridge.expression(key)))))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftx.GraftSqlBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** Johnson–Lindenstrauss random-sign projection of a float embedding to
@@ -99,10 +100,9 @@ object JlProject {
     new GenericArrayData(out)
   }
 
-  /** Register `jl_project` in the session registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jl_project", exprs => JlProject(exprs.head, signMatrix), "built-in")
+  /** `jl_project(emb)` under [[signMatrix]], as a Column. */
+  def of(emb: Column): Column =
+    GraftSqlBridge.column(JlProject(GraftSqlBridge.expression(emb), signMatrix))
 
   /** The sign rule as a DuckDB CTE body (i in [0, dimMax), j in [0, K)):
     * regenerates the identical matrix oracle-side from the same md5.

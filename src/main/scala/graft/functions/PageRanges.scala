@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.graftx.GraftSqlBridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Custom `Generator` (the UDTF surface, SURVEY.md §2.L row 4) — the
@@ -64,8 +65,7 @@ case class PageRanges(total: Expression, step: Expression)
 }
 
 object PageRanges {
-  /** Register `page_ranges(total, step)` in the session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "page_ranges", exprs => PageRanges(exprs(0), exprs(1)), "built-in")
+  /** `page_ranges(total, step)` as a generator Column for `select`. */
+  def of(total: Column, step: Int): Column =
+    GraftSqlBridge.column(PageRanges(GraftSqlBridge.expression(total), Literal(step)))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graftx.GraftSqlBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Exact run-length statistics of a SORTED string array, as one native
@@ -87,8 +89,7 @@ case class RunLengthStats(child: Expression) extends UnaryExpression {
 }
 
 object RunLengthStats {
-  /** Register `run_length_stats` in the session registry (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "run_length_stats", exprs => RunLengthStats(exprs.head), "built-in")
+  /** `run_length_stats(sorted)` as a Column. */
+  def of(sorted: Column): Column =
+    GraftSqlBridge.column(RunLengthStats(GraftSqlBridge.expression(sorted)))
 }

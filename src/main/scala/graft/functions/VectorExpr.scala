@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.GraftSqlBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
 
 /** Fixed-point dot product of two float-array columns, as a native
@@ -85,23 +86,23 @@ case class FixedPointDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Column-level vector math built on [[FixedPointDot]]. */
+/** Column-level vector math built on [[FixedPointDot]]. Each function
+  * builds the expression itself, so it resolves in any session, with or
+  * without [[graft.GraftExtensions]].
+  */
 object VectorFunctions {
 
-  /** Register `fixed_dot` in the session's function registry (idempotent)
-    * so it is usable from `expr(...)`/SQL.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fixed_dot", exprs => FixedPointDot(exprs.head, exprs(1)), "built-in")
+  /** `fixed_dot(a, b)`: the exact fixed-point dot as a LONG column. */
+  def fixedDot(a: Column, b: Column): Column = GraftSqlBridge.column(
+    FixedPointDot(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
   /** Fixed-point dot as a double (÷ 10^15 after the exact long sum). */
   def dot(a: String, b: String): Column =
-    expr(s"fixed_dot($a, $b)").cast("double") / 1e15
+    fixedDot(col(a), col(b)).cast("double") / 1e15
 
   /** L2 norm under the same fixed-point arithmetic. */
   def norm(a: String): Column =
-    sqrt(expr(s"fixed_dot($a, $a)").cast("double") / 1e15)
+    sqrt(fixedDot(col(a), col(a)).cast("double") / 1e15)
 
   /** Unit normalization back to FLOAT, given a precomputed norm column —
     * THE canonical normalization for every PQ/IVF surface: codebook

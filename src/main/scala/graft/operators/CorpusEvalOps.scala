@@ -57,6 +57,46 @@ object CorpusEvalOps extends OpGroup {
        | / ${LlmOps.MinHashes}.0) / un * 1000000.0) AS BIGINT)"""
       .stripMargin.replace("\n", " ")
 
+  /** (doc_id, shs): each document's distinct word 3-shingles, PINNED
+    * once. The explode every consumer runs makes the optimizer infer
+    * `size(shs) > 0` and push the WHOLE shingle expression down into
+    * the (1-split) scan as a filter predicate, re-evaluated once per
+    * consumer subtree — a 1.4–1.7 s single-task stage per copy (the
+    * §4.4 duplicated-expression trap, JVM edition). The pin cuts the
+    * plan to one shingle pass over the caller's spread partitions and
+    * stops the filter pushdown at the materialized blocks; it is a
+    * tracked pin, so `Checkpoints.releasePins` reclaims it.
+    */
+  private def pinnedShingles(docs: DataFrame): DataFrame =
+    graft.functions.Checkpoints.pin(docs
+      .withColumn("ws", split(col("text"), " "))
+      .withColumn("shs",
+        array_distinct(graft.functions.TextSim.shingles("ws", 3)))
+      .select("doc_id", "shs"))
+
+  /** The 10% truth sample (doc_id % 10 = 0) as pinned shingle sets,
+    * scan-spread below the shingle transform (r18, see Spread doc).
+    */
+  private def truthSample(s: SparkSession, d: String): DataFrame =
+    pinnedShingles(graft.functions.Spread(
+      Tables.documents(s, d).select(col("doc_id"), col("text"))
+        .filter(col("doc_id") % 10 === 0),
+      col("doc_id")))
+
+  /** Every sample pair sharing a shingle: (doc_a < doc_b, na, nb, inter)
+    * with the two shingle-set sizes and their exact intersection.
+    */
+  private def truthPairs(sample: DataFrame): DataFrame = {
+    val tok = sample.select(col("doc_id"), explode(col("shs")).as("sh"))
+    val sized = tok.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val inv = tok.join(sized, "doc_id")
+    inv.as("a").join(inv.as("b"),
+        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        col("a.n").as("na"), col("b.n").as("nb"))
+      .agg(count(lit(1)).as("inter"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Burrows' Delta stylometry (r12, Burrows 2002): pairwise style
     // distance between sources = mean |z_a − z_b| over the top-K
@@ -107,26 +147,8 @@ object CorpusEvalOps extends OpGroup {
     // Dedup candidate quality: MinHash band candidates (est_j ≥ 0.5)
     // vs exact 3-shingle Jaccard ≥ 0.5 inside the 10% truth sample.
     "minhash_candidate_quality" -> ((s, d) => {
-      // scan-spread below the shingle transform (r18, see Spread doc)
-      // pinned for the same pushed-shingle-filter reason as the
-      // calibration query below (see comment there)
-      val sample = graft.functions.Spread(
-          Tables.documents(s, d).select(col("doc_id"), col("text"))
-            .filter(col("doc_id") % 10 === 0),
-          col("doc_id"))
-        .withColumn("ws", split(col("text"), " "))
-        .withColumn("shs",
-          array_distinct(graft.functions.TextSim.shingles("ws", 3)))
-        .select("doc_id", "shs")
-        .localCheckpoint()
-      val tok = sample.select(col("doc_id"), explode(col("shs")).as("sh"))
-      val sized = tok.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val inv = tok.join(sized, "doc_id")
-      val truth = inv.as("a").join(inv.as("b"),
-          col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-          col("a.n").as("na"), col("b.n").as("nb"))
-        .agg(count(lit(1)).as("inter"))
+      val sample = truthSample(s, d)
+      val truth = truthPairs(sample)
         .filter(expr("3 * inter >= na + nb"))
         .select("doc_a", "doc_b").withColumn("t", lit(1L))
       val cand = graft.functions.TextSim
@@ -183,23 +205,10 @@ object CorpusEvalOps extends OpGroup {
       // it explicitly: size ESTIMATES of the multi-join band pipeline
       // are wildly off and the planner otherwise sorts the corpus for
       // a sort-merge semi join
-      // The shingle table is PINNED once: the explode makes the
-      // optimizer infer `size(shs) > 0` and push the WHOLE shingle
-      // expression down into the (1-split) scan as a filter predicate,
-      // re-evaluated once per consumer subtree — a 1.4–1.7 s
-      // single-task stage per copy (the §4.4 duplicated-expression
-      // trap, JVM edition). The pin cuts the plan to one shingle pass
-      // over the spread partitions and stops the filter pushdown at
-      // the materialized blocks.
-      val sample = graft.functions.Spread(
+      val sample = pinnedShingles(graft.functions.Spread(
           Tables.documents(s, d).select(col("doc_id"), col("text")),
           col("doc_id"))
-        .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-        .withColumn("ws", split(col("text"), " "))
-        .withColumn("shs",
-          array_distinct(graft.functions.TextSim.shingles("ws", 3)))
-        .select("doc_id", "shs")
-        .localCheckpoint()
+        .join(broadcast(candDocs), Seq("doc_id"), "left_semi"))
       val tok = sample.select(col("doc_id"), explode(col("shs")).as("sh"))
       val sized = tok.groupBy("doc_id").agg(count(lit(1)).as("n"))
       val inter = tok.as("a").join(tok.as("b"),
@@ -278,25 +287,7 @@ object CorpusEvalOps extends OpGroup {
     // join; buckets are integer-exact J deciles; theory is a single
     // IEEE leaf over the bucket-center literal.
     "lsh_s_curve_calibration" -> ((s, d) => {
-      // spread + pinned for the same pushed-shingle-filter reason as
-      // the calibration query above
-      val sample = graft.functions.Spread(
-          Tables.documents(s, d).select(col("doc_id"), col("text"))
-            .filter(col("doc_id") % 10 === 0),
-          col("doc_id"))
-        .withColumn("ws", split(col("text"), " "))
-        .withColumn("shs",
-          array_distinct(graft.functions.TextSim.shingles("ws", 3)))
-        .select("doc_id", "shs")
-        .localCheckpoint()
-      val tok = sample.select(col("doc_id"), explode(col("shs")).as("sh"))
-      val sized = tok.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val inv = tok.join(sized, "doc_id")
-      val truth = inv.as("a").join(inv.as("b"),
-          col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-          col("a.n").as("na"), col("b.n").as("nb"))
-        .agg(count(lit(1)).as("inter"))
+      val truth = truthPairs(truthSample(s, d))
         .withColumn("bucket",
           expr("least(9, 10 * inter DIV (na + nb - inter))"))
       val cand = graft.functions.TextSim
@@ -376,9 +367,9 @@ object CorpusEvalOps extends OpGroup {
     // engines; empty docs fold to an empty array — the ADVICE r10
     // descending-sequence edge is gone by construction).
     "char_entropy_by_source" -> ((s, d) => {
-      graft.functions.CharFreq.register(s)
       val cnt = Tables.documents(s, d)
-        .select(col("source"), explode(expr("char_freq(text)")).as("f"))
+        .select(col("source"), explode(graft.functions.CharFreq.of(col("text")))
+          .as("f"))
         .groupBy(col("source"), col("f.ch").as("ch"))
         .agg(sum(col("f.c")).as("c"))
       val tot = cnt.groupBy("source").agg(sum("c").as("n_chars"))

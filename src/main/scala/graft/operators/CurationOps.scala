@@ -320,7 +320,6 @@ object CurationOps extends OpGroup {
     // (round-2 ERR). concat_ws gives '' on an empty array, matching the
     // coalesce-guarded DuckDB side (array_to_string([]) is NULL there).
     "embedding_quantize_int8" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       Tables.embeddings(s, d)
         .withColumn("norm", graft.functions.VectorFunctions.norm("embedding"))
         .select(col("vec_id"), size(col("embedding")).as("emb_dim"),

@@ -91,7 +91,6 @@ object GraphAudienceOps extends OpGroup {
     // SemDeDup τ sweep: pair + affected-doc yield at τ ∈ {0.80..0.95}
     // over within-cell cosine pairs.
     "semantic_tau_sweep" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val stored = s.read.parquet(SemiStructuredOps.ivfLayout(s, d))
         .select(col("vec_id"), col("embedding"),
           col("cell").cast("int").as("cell"))

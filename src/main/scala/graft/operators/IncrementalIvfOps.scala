@@ -93,14 +93,11 @@ object IncrementalIvfOps extends OpGroup {
     */
   private[graft] def encodeOnFrozen(
       s: SparkSession, d: String, vecs: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
-    graft.functions.AnnPq.register(s,
-      SemiStructuredOps.frozenPqCodebook(s, d))
     val cents = s.read
       .parquet(s"${SemiStructuredOps.ivfLayout(s, d)}.centroids")
       .select(col("cand_cell").cast("int").as("cell"), col("centroid"))
     graft.functions.AnnIvf
-      .assign(s, vecs, SemiStructuredOps.frozenQuantizer(s, d))
+      .assign(vecs, SemiStructuredOps.frozenQuantizer(s, d))
       .select(col("vec_id"), col("embedding"), col("cell"))
       .withColumn("norm", graft.functions.VectorFunctions.norm("embedding"))
       .join(broadcast(cents), "cell")
@@ -108,10 +105,12 @@ object IncrementalIvfOps extends OpGroup {
         """zip_with(embedding, centroid,
           |  (x, y) -> CAST(CAST(x AS DOUBLE) / norm - y AS FLOAT))"""
           .stripMargin))
-      .withColumn("dist2_fp", expr("fixed_dot(diff, diff)"))
+      .withColumn("dist2_fp",
+        graft.functions.VectorFunctions.fixedDot(col("diff"), col("diff")))
       .withColumn("ne", graft.functions.VectorFunctions
         .unitNormalized("embedding", "norm"))
-      .withColumn("codes", expr("pq_encode(ne)"))
+      .withColumn("codes", graft.functions.AnnPq.encode(col("ne"),
+        SemiStructuredOps.frozenPqCodebook(s, d)))
       .select(col("vec_id"), col("cell").cast("int").as("cell"),
         col("dist2_fp"), col("codes"))
   }

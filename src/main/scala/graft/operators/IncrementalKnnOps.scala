@@ -70,7 +70,6 @@ object IncrementalKnnOps extends OpGroup {
     * pipeline. Input: (vec_id, embedding, cell).
     */
   private[graft] def topkEdges(s: SparkSession, vecs: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val withNorm = vecs
       .select(col("vec_id"), col("embedding"), col("cell").cast("int").as("cell"))
       .withColumn("norm", graft.functions.VectorFunctions.norm("embedding"))
@@ -98,7 +97,7 @@ object IncrementalKnnOps extends OpGroup {
 
   /** Fresh batch rows encoded on the FROZEN coarse quantizer. */
   private def freshWithCells(s: SparkSession, d: String): DataFrame =
-    graft.functions.AnnIvf.assign(s, IncrementalIvfOps.freshBatchVecs(s, d),
+    graft.functions.AnnIvf.assign(IncrementalIvfOps.freshBatchVecs(s, d),
         SemiStructuredOps.frozenQuantizer(s, d))
       .select(col("vec_id"), col("embedding"),
         col("cell").cast("int").as("cell"))

@@ -100,20 +100,18 @@ object LlmOps extends OpGroup {
     * catalog, never a scan.
     */
   private[graft] def bloomPrefilteredBatch(s: SparkSession, d: String): DataFrame = {
-    graft.functions.BloomDedup.register(s)
     val items = math.max(64L, Tables.rowCount(s, d, "documents") * 4 / 5)
     val bits = items * 10
     // might_contain demands a CONSTANT or scalar-subquery bitset (the
     // InjectRuntimeFilter shape) — a scalar subquery keeps the build
     // fully distributed and the probe codegen'd
-    Tables.parquet(s, dedupIndex(s, d))
-      .agg(expr(s"bloom_agg(h, ${items}L, ${bits}L)").as("bf"))
-      .createOrReplaceTempView("graft_bloom_idx")
+    val bloomIdx = Tables.parquet(s, dedupIndex(s, d))
+      .agg(graft.functions.BloomDedup.agg(col("h"), items, bits).as("bf"))
     Tables.documents(s, d)
       .filter(col("doc_id") % 5 === 4)
       .select(col("doc_id"), prefixKey.as("h"))
       .withColumn("maybe_seen",
-        expr("bloom_might_contain((SELECT bf FROM graft_bloom_idx), h)"))
+        graft.functions.BloomDedup.mightContain(bloomIdx.scalar(), col("h")))
   }
 
   /** RAKE phrase-boundary stopwords: the union of the four lang-ID
@@ -485,7 +483,6 @@ object LlmOps extends OpGroup {
     // Scoring runs on the codegen'd FixedPointDot expression (exact long
     // arithmetic ⇒ still bit-identical to the DuckDB oracle).
     "cosine_similarity_topk" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           graft.functions.VectorFunctions.norm("embedding").as("norm"))

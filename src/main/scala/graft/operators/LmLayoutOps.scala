@@ -223,8 +223,8 @@ object LmLayoutOps extends OpGroup {
       // duplicate ~1.2 s-CPU stages), and the explode's inferred
       // size() filter pushed the split back into the 1-split scan —
       // spread + pin computes the stream once over the cores
-      val pmBig = graft.functions.Spread(pm, col("doc_id"))
-        .transform(bigrams).localCheckpoint()
+      val pmBig = graft.functions.Checkpoints.pin(
+        graft.functions.Spread(pm, col("doc_id")).transform(bigrams))
       val topI = pplTopFromModel(incM, incC1, incSt, pmBig)
       val topR = pplTopFromModel(rebM, rebC1, rebSt, pmBig)
         .select(col("rank"), col("doc_id").as("doc_r"),

@@ -36,7 +36,6 @@ object MiningOps extends OpGroup {
     // Hard negatives: top-5 highest-dot different-label vectors per
     // query (queries = vec_id 0..4).
     "hard_negative_mining" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val qs = Tables.embeddings(s, d).filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
           col("label").as("q_label"))
@@ -44,7 +43,8 @@ object MiningOps extends OpGroup {
         .crossJoin(broadcast(qs))
         .filter(col("label") =!= col("q_label"))
         .select(col("qid"), col("vec_id"),
-          expr("fixed_dot(embedding, q_emb)").as("dot_fp"))
+          graft.functions.VectorFunctions
+            .fixedDot(col("embedding"), col("q_emb")).as("dot_fp"))
       val w = Window.partitionBy("qid")
         .orderBy(col("dot_fp").desc, col("vec_id"))
       cand.withColumn("rank", row_number().over(w))

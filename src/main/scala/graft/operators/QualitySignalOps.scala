@@ -80,9 +80,9 @@ object QualitySignalOps extends OpGroup {
     // sanity read (is the projected space non-degenerate, are
     // coordinates balanced) run before swapping d-dim ops to k-dim.
     "random_projection_jl" -> ((s, d) => {
-      graft.functions.JlProject.register(s)
       Tables.embeddings(s, d)
-        .select(posexplode(expr("jl_project(embedding)")).as(Seq("j", "pj")))
+        .select(posexplode(graft.functions.JlProject.of(col("embedding")))
+          .as(Seq("j", "pj")))
         .groupBy("j")
         .agg(count(lit(1)).as("n"),
           sum(col("pj").cast("decimal(38,0)")).cast("string").as("sum_fp"),

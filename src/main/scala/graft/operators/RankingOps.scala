@@ -106,7 +106,6 @@ object RankingOps extends OpGroup {
     // TakeOrdered(10); the fusion join touches ≤20 rows; the ≤10-row
     // windows are the documented benign bm25 class.
     "rrf_rank_fusion" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val lex = bm25Top(s, d).withColumn("bm25_rank",
         row_number().over(Window.orderBy(col("score_fp").desc, col("doc_id"))))
       val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
@@ -114,7 +113,8 @@ object RankingOps extends OpGroup {
       val dense = Tables.embeddings(s, d)
         .crossJoin(broadcast(q))
         .select(col("vec_id").as("doc_id"),
-          expr("fixed_dot(embedding, q_emb)").as("dot_fp"))
+          graft.functions.VectorFunctions
+            .fixedDot(col("embedding"), col("q_emb")).as("dot_fp"))
         .orderBy(col("dot_fp").desc, col("doc_id")).limit(10)
         .withColumn("dense_rank",
           row_number().over(Window.orderBy(col("dot_fp").desc, col("doc_id"))))
@@ -138,7 +138,6 @@ object RankingOps extends OpGroup {
     // Candidates without an embedding drop (inner join) — at sf0.1 the
     // embedding table covers a 2k-doc subset, mirrored in the oracle.
     "hybrid_retrieval_rerank" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           graft.functions.VectorFunctions.norm("embedding").as("norm"))

@@ -33,7 +33,6 @@ object RetrievalEvalOps extends OpGroup {
     * query sample, with the candidate's cell label for the IVF filter.
     */
   private def scoredSet(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), col("embedding"),
         graft.functions.VectorFunctions.norm("embedding").as("norm"))

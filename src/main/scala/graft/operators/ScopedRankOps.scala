@@ -69,13 +69,14 @@ object ScopedRankOps extends OpGroup {
     // Does the embedding norm track the text length on the shared id
     // space (vec_id = doc_id)?
     "text_embedding_length_corr" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       // squared norm downscaled 1e9 at the leaf: keeps n·Σy² inside
       // DECIMAL(38,0)/HUGEINT (raw 1e15-scale dots would overflow the
       // moment products); correlation is scale-invariant and the
       // truncation is the same defined quantization on both engines
       val e = Tables.embeddings(s, d).select(col("vec_id"),
-        expr("fixed_dot(embedding, embedding) DIV 1000000000").as("y"))
+          graft.functions.VectorFunctions
+            .fixedDot(col("embedding"), col("embedding")).as("y"))
+        .withColumn("y", expr("y DIV 1000000000"))
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars").as("x"))
       val dec = DecimalType(38, 0)

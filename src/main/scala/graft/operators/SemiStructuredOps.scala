@@ -96,7 +96,7 @@ object SemiStructuredOps extends OpGroup {
 
   private[graft] def ivfLayout(s: SparkSession, d: String): String =
     ivfLayoutCache(s, d, graft.Layout.fingerprint(Tables.embeddings(s, d))) { p =>
-      graft.functions.AnnIvf.assign(s, Tables.embeddings(s, d), quantizer(s, d))
+      graft.functions.AnnIvf.assign(Tables.embeddings(s, d), quantizer(s, d))
         .select(col("vec_id"), col("embedding"), col("cell"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("cell").parquet(p)
@@ -131,7 +131,6 @@ object SemiStructuredOps extends OpGroup {
     * match a fresh derivation and an independent driver-side replay.
     */
   private[graft] def outlierDistances(s: SparkSession, layoutPath: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val stored = s.read.parquet(layoutPath)
       .select(col("vec_id"), col("embedding"),
         col("cell").cast("int").as("cell"))
@@ -143,7 +142,8 @@ object SemiStructuredOps extends OpGroup {
         """zip_with(embedding, centroid,
           |  (x, y) -> CAST(CAST(x AS DOUBLE) / norm - y AS FLOAT))""".stripMargin))
       .select(col("vec_id"), col("cell"),
-        expr("fixed_dot(diff, diff)").as("dist2_fp"))
+        graft.functions.VectorFunctions.fixedDot(col("diff"), col("diff"))
+          .as("dist2_fp"))
   }
 
   /** PQ codebooks, fitted once per dataset driver-side on the same
@@ -173,13 +173,11 @@ object SemiStructuredOps extends OpGroup {
   private def pqLayout(s: SparkSession, d: String): String =
     pqLayoutCache(s, d, graft.Layout.fingerprint(Tables.embeddings(s, d))) { p =>
       val cb = pqCodebook(s, d)
-      graft.functions.AnnPq.register(s, cb)
-      graft.functions.VectorFunctions.register(s)
       Tables.embeddings(s, d)
         .withColumn("__n", graft.functions.VectorFunctions.norm("embedding"))
         .withColumn("ne",
           graft.functions.VectorFunctions.unitNormalized("embedding", "__n"))
-        .withColumn("codes", expr("pq_encode(ne)"))
+        .withColumn("codes", graft.functions.AnnPq.encode(col("ne"), cb))
         .select("vec_id", "ne", "codes")
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
       import s.implicits._
@@ -225,13 +223,13 @@ object SemiStructuredOps extends OpGroup {
     // a GREEN-hash approximate-NN operator.
     "ann_pq_adc" -> ((s, d) => {
       val stored = s.read.parquet(pqLayout(s, d))
-      graft.functions.AnnPq.register(s, pqCodebook(s, d))
       val q = stored.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("ne").as("q_ne"))
       val scored = stored.select(col("vec_id"), col("codes"))
         .crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("fx", expr("pq_adc(q_ne, codes)"))
+        .withColumn("fx", graft.functions.AnnPq.adc(col("q_ne"), col("codes"),
+          pqCodebook(s, d)))
       val w = Window.partitionBy("q_id").orderBy(col("fx").desc, col("vec_id"))
       scored.withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 3)
@@ -255,9 +253,9 @@ object SemiStructuredOps extends OpGroup {
     // non-negatives, identical on both engines.
     "pq_subspace_recon_error" -> ((s, d) => {
       val stored = s.read.parquet(pqLayout(s, d))
-      graft.functions.AnnPq.register(s, pqCodebook(s, d))
       stored.select(col("vec_id"),
-          posexplode(expr("pq_recon_err(ne, codes)")).as(Seq("j", "e")))
+          posexplode(graft.functions.AnnPq.reconErr(col("ne"), col("codes"),
+            pqCodebook(s, d))).as(Seq("j", "e")))
         .groupBy("j")
         .agg(count(lit(1)).as("n_vecs"),
           sum(col("e").cast("decimal(38,0)")).as("sum_dec"))
@@ -343,7 +341,6 @@ object SemiStructuredOps extends OpGroup {
     // exact 1e-6 integer division. Ground truth only ever exists for
     // the bounded query sample — never a corpus×corpus pass.
     "ivf_nprobe_recall_curve" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val stored = s.read.parquet(ivfLayout(s, d))
         .select(col("vec_id"), col("embedding"),
           col("cell").cast("int").as("cell"),
@@ -408,7 +405,6 @@ object SemiStructuredOps extends OpGroup {
     // broadcast; nothing touches the corpus vectors beyond the
     // layout's cell-count aggregate.
     "ivf_probe_cost_curve" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val stored = s.read.parquet(ivfLayout(s, d))
         .select(col("vec_id"), col("embedding"),
           col("cell").cast("int").as("cell"),
@@ -493,7 +489,6 @@ object SemiStructuredOps extends OpGroup {
     // forwards at most 3 edges per node into the per-node rank shuffle.
     // Isolated cell-singletons contribute no edges (graph semantics).
     "knn_graph_topk" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val stored = s.read.parquet(ivfLayout(s, d))
         .select(col("vec_id"), col("embedding"),
           col("cell").cast("int").as("cell"))
@@ -741,7 +736,6 @@ object SemiStructuredOps extends OpGroup {
     // equi-join on cell (never all-pairs), and only (id, cos) pairs
     // shuffle out of it.
     "semantic_dedup_cluster" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val stored = s.read.parquet(ivfLayout(s, d))
         .select(col("vec_id"), col("embedding"),
           col("cell").cast("int").as("cell"))

@@ -154,10 +154,10 @@ object SourceOps extends OpGroup {
     // remaining fetch, tail page truncated. Per-group totals come from
     // a hash aggregate; the expansion is a native Generate.
     "page_plan_generator" -> ((s, d) => {
-      graft.functions.PageRanges.register(s)
       Tables.part(s, d)
         .groupBy("p_brand").agg(count(lit(1)).as("total"))
-        .selectExpr("p_brand", "total", "page_ranges(total, 50)")
+        .select(col("p_brand"), col("total"),
+          graft.functions.PageRanges.of(col("total"), 50))
         .orderBy("p_brand", "page_offset")
     }),
 

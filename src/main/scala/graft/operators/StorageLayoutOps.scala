@@ -122,12 +122,12 @@ object StorageLayoutOps extends OpGroup {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val fDate = Future(layout("shipdate_sorted",
+      val fDate = Future(graft.functions.Checkpoints.pin(layout("shipdate_sorted",
         Seq("sd", "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-        expr("datediff(sd, DATE '1970-01-01')")).localCheckpoint())
-      val fKey = Future(layout("orderkey_sorted",
+        expr("datediff(sd, DATE '1970-01-01')"))))
+      val fKey = Future(graft.functions.Checkpoints.pin(layout("orderkey_sorted",
         Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-        col("l_orderkey")).localCheckpoint())
+        col("l_orderkey"))))
       val blocks = Await.result(fDate, Duration.Inf)
         .unionByName(Await.result(fKey, Duration.Inf))
       val cuts = li.select(year(col("sd")).as("cut_year")).distinct()

@@ -54,14 +54,14 @@ object TrainingDataOps extends OpGroup {
 
   private def lshLayout(s: SparkSession, d: String): String =
     lshLayoutCache(s, d, graft.Layout.fingerprint(Tables.embeddings(s, d))) { p =>
-      graft.functions.VectorFunctions.register(s)
       val dim = Tables.embeddings(s, d)
         .select(size(col("embedding"))).head.getInt(0)
       val rnd = new scala.util.Random(42L)
       val planes: IndexedSeq[Array[Float]] =
         (0 until 16).map(_ => Array.fill(dim)(rnd.nextGaussian().toFloat))
       val sig = (0 until 16).map(i =>
-        when(call_function("fixed_dot", col("ne"), typedlit(planes(i))) >= 0,
+        when(graft.functions.VectorFunctions
+            .fixedDot(col("ne"), typedlit(planes(i))) >= 0,
           shiftleft(lit(1L), i)).otherwise(lit(0L))).reduce(_ bitwiseOR _)
       Tables.embeddings(s, d)
         .withColumn("__n", graft.functions.VectorFunctions.norm("embedding"))
@@ -144,7 +144,6 @@ object TrainingDataOps extends OpGroup {
     // content-derived md5 rank (layout/retry/engine-invariant, the
     // mixture_weighted_resample precedent).
     "contrastive_pair_mining" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val cells = s.read.parquet(SemiStructuredOps.ivfLayout(s, d))
         .select(col("vec_id"), col("cell").cast("int").as("cell"))
       val e = Tables.embeddings(s, d)
@@ -213,7 +212,6 @@ object TrainingDataOps extends OpGroup {
     // buckets) so per-bucket candidate lists stay bounded — same
     // precision/recall trade the MinHash/SimHash band caps encode.
     "lsh_hyperplane_near_dup" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val stored = s.read.parquet(lshLayout(s, d))
       // band values as a 4-slot array so the SHARED capped band join
       // (TextSim.signatureBandPairs, bucketCap 1000) derives the
@@ -231,7 +229,7 @@ object TrainingDataOps extends OpGroup {
       val vb = stored.select(col("vec_id").as("id_b"), col("ne").as("ne_b"))
       cand.join(va, "id_a").join(vb, "id_b")
         .withColumn("cos",
-          call_function("fixed_dot", col("ne_a"), col("ne_b"))
+          graft.functions.VectorFunctions.fixedDot(col("ne_a"), col("ne_b"))
             .cast("double") / 1e15) // unit vectors ⇒ dot IS cosine
         .filter(col("cos") >= 0.25)
         .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cosine"))
@@ -253,7 +251,6 @@ object TrainingDataOps extends OpGroup {
 
     // ANN, IVF-style: probe only the query's coarse cell (label).
     "ann_ivf_topk" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), col("embedding"),
           graft.functions.VectorFunctions.norm("embedding").as("norm"))
@@ -283,7 +280,6 @@ object TrainingDataOps extends OpGroup {
     // Recall is an exact 1e-6 fixed-point integer division; every
     // column is integer ⇒ engine-portable by construction.
     "ann_recall_eval" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), col("embedding"),
           graft.functions.VectorFunctions.norm("embedding").as("norm"))
@@ -318,7 +314,6 @@ object TrainingDataOps extends OpGroup {
     // sweep costs one scoring pass; micro-averaged recall is an exact
     // 1e-6 division per k.
     "ann_recall_at_k_curve" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), col("embedding"),
           graft.functions.VectorFunctions.norm("embedding").as("norm"))
@@ -363,7 +358,6 @@ object TrainingDataOps extends OpGroup {
     // fixture's dense random embeddings, and a real corpus would
     // pre-filter zero vectors).
     "matryoshka_dim_recall" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val q = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -395,7 +389,6 @@ object TrainingDataOps extends OpGroup {
 
     // Embedding-cosine near-dup pairs, blocked by coarse cell.
     "embedding_near_dup" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), col("embedding"),
           graft.functions.VectorFunctions.norm("embedding").as("norm"))
@@ -542,14 +535,14 @@ object TrainingDataOps extends OpGroup {
     // explode+groupBy form moves ~n_tokens rows per doc through two
     // aggregates; this moves one row per doc, exact either way.
     "repetition_filter" -> ((s, d) => {
-      graft.functions.RunLengthStats.register(s)
       Tables.documents(s, d)
         .select("doc_id", "text")
         .withColumn("ws", split(col("text"), " "))
         .withColumn("bgs",
           expr("""transform(sequence(0, greatest(size(ws) - 2, 0)),
                  |  i -> concat_ws(' ', slice(ws, i + 1, 2)))""".stripMargin))
-        .withColumn("st", expr("run_length_stats(sort_array(bgs))"))
+        .withColumn("st",
+          graft.functions.RunLengthStats.of(sort_array(col("bgs"))))
         .select(col("doc_id"),
           expr("st[0]").as("n_bigrams"),
           expr("st[1]").as("n_distinct"),

@@ -92,7 +92,7 @@ class AnnSpec extends SparkSpec {
       val emb = Tables.embeddings(spark, d)
       val cents = graft.functions.AnnIvf
         .fitQuantizer(graft.functions.AnnPq.fitSample(emb), k = 4)
-      val cells = graft.functions.AnnIvf.assign(spark, emb, cents)
+      val cells = graft.functions.AnnIvf.assign(emb, cents)
         .select("vec_id", "cell").as[(Long, Int)].collect().toMap
       (cents.map(_.toSeq).toSeq, cells)
     }
@@ -115,7 +115,6 @@ class AnnSpec extends SparkSpec {
 
   test("PQ: 8 small-int codes per vector; ADC self-score preserves most of the unit norm") {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
-    graft.functions.VectorFunctions.register(spark)
     val ne = Tables.embeddings(spark, sf())
       .withColumn("__n", graft.functions.VectorFunctions.norm("embedding"))
       .select(expr("transform(embedding, x -> CAST(CAST(x AS DOUBLE) / __n AS FLOAT))"))

@@ -34,6 +34,15 @@ class CorpusEvalSpec extends SparkSpec {
     }
   }
 
+  test("lsh_s_curve_calibration's shingle pin is tracked: releasePins reclaims it") {
+    graft.functions.Checkpoints.releasePins(spark) // drain earlier suites' pins
+    val df = operators.CorpusEvalOps.queries("lsh_s_curve_calibration")(spark, sf())
+    df.collect()
+    val released = graft.functions.Checkpoints.releasePins(spark)
+    assert(released >= 1, "the shingle table's pin bypassed the pin registry")
+    assert(df.columns.nonEmpty) // keeps the plan, and so its pin, reachable
+  }
+
   test("lsh_s_curve_calibration: rates in range; theory curve monotone") {
     val rows = run("lsh_s_curve_calibration")
     assert(rows.nonEmpty)

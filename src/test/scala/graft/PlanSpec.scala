@@ -451,9 +451,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("fixed_dot runs inside WholeStageCodegen (no fallback)") {
-    graft.functions.VectorFunctions.register(spark)
     val e = Tables.embeddings(spark, sf())
-      .select(expr("fixed_dot(embedding, embedding)").as("d"))
+      .select(graft.functions.VectorFunctions
+        .fixedDot(col("embedding"), col("embedding")).as("d"))
     // executedPlan string marks codegen stages with '*'
     assert(e.queryExecution.executedPlan.toString.contains("*(1) Project"))
   }
@@ -487,8 +487,8 @@ class PlanSpec extends SparkSpec {
       .localCheckpoint() // materialize past the interpreted transform
     val cb = graft.functions.AnnPq.fitCodebooks(
       ne.collect().map(_.getSeq[Float](0).toArray), m = 8, k = 16)
-    graft.functions.AnnPq.register(spark, cb)
-    val e = ne.select(expr("pq_adc(ne, pq_encode(ne))").as("s"))
+    val e = ne.select(graft.functions.AnnPq.adc(col("ne"),
+      graft.functions.AnnPq.encode(col("ne"), cb), cb).as("s"))
     assert(e.queryExecution.executedPlan.toString.contains("*(1) Project"))
     // and the codegen path agrees with the interpreted eval
     val got = e.collect().map(_.getLong(0))

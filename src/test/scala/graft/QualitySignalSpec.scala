@@ -54,11 +54,10 @@ class QualitySignalSpec extends SparkSpec {
         s"sign matrix disagrees with the md5 rule at ($i, $j)")
 
     // expression vs reference fold on real vectors
-    JlProject.register(spark)
     val rows = Tables.embeddings(spark, sf())
       .filter(col("vec_id") < 5)
       .select(col("vec_id"), col("embedding"),
-        expr("jl_project(embedding)").as("p"))
+        JlProject.of(col("embedding")).as("p"))
       .as[(Long, Array[Float], Array[Long])].collect()
     assert(rows.nonEmpty)
     rows.foreach { case (id, emb, p) =>

@@ -92,14 +92,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
 
+  /** Applications the suites ran under. Their layout directories
+    * (`SessionState.appDir`: `/tmp/graft_<name>/<applicationId>`) are deleted
+    * when the test JVM exits — not after each suite, because later
+    * suites read layout paths the application memoized.
+    */
+  private val appIds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  sys.addShutdownHook {
+    val roots = Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("graft_"))
+    appIds.forEach(id => roots.foreach(r =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(r, id))))
+  }
+
   /** The suites' session: the running one, or a new application built
     * the same way when none is running.
     */
-  def session(): SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions)
-    .getOrCreate()
+  def session(): SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    appIds.add(s.sparkContext.applicationId)
+    s
+  }
 }

@@ -31,9 +31,8 @@ class UdfSpec extends SparkSpec {
   }
 
   test("run_length_stats: exact (total, distinct, max_run) over sorted arrays") {
-    graft.functions.RunLengthStats.register(spark)
     def stats(sql: String): Seq[Long] =
-      spark.sql(s"SELECT run_length_stats($sql) AS s")
+      spark.range(1).select(graft.functions.RunLengthStats.of(expr(sql)).as("s"))
         .head().getSeq[Long](0)
     assert(stats("sort_array(array('b','a','b','a','b'))") === Seq(5L, 2L, 3L))
     assert(stats("array('x')") === Seq(1L, 1L, 1L))
